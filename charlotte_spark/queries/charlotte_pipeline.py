@@ -518,6 +518,49 @@ def d60_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rt_digest(rows, "foreachbatch_upsert", "table_name")
 
 
+def _crash_then_resume(spark: SparkSession, db: SnorbyDB, ckpt: str, fx: dict) -> None:
+    """d182's drill: a one-file-per-batch stream whose sink crashes
+    right after applying batch 1, then a resume from the same
+    checkpoint and star."""
+    applied = {"n": 0}
+
+    def crashing_sink(batch_df: DataFrame, batch_id: int) -> None:
+        sig_map, class_map = load_maps(
+            spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
+        )
+        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
+        applied["n"] += 1
+        if applied["n"] == 2:
+            # AFTER apply: the batch is in the star + ledger, but the
+            # stream dies before the checkpoint commit log records it
+            raise RuntimeError("injected crash after commit")
+
+    alerts = read_spools(spark, fx["spools"], streaming=True, max_files_per_trigger=1)
+    q = (
+        alerts.writeStream.foreachBatch(crashing_sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    crashed = False
+    try:
+        q.awaitTermination()
+    except Exception as e:  # StreamingQueryException wrapping the injection
+        if "injected crash" not in str(e):
+            raise
+        crashed = True
+    if not crashed:
+        # Raised OUTSIDE the try so the except above can never swallow it
+        # (its message would otherwise match the handler's substring): a
+        # non-firing injection must fail loudly, not degrade the audit to
+        # comparing two uninterrupted runs.
+        raise AssertionError("injected crash did not fire")
+
+    # resume from the same checkpoint + db: batch 1 re-delivers, the
+    # ledger skips it, the remaining spool files apply once each
+    run_streaming_pipeline(spark, db, ckpt)
+
+
 @query(
     "d182_restart_exactly_once",
     tags=("D182", "R2", "R18", "R21", "D60"),
@@ -574,51 +617,17 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref_pool = ThreadPoolExecutor(max_workers=1)
     ref_fut = ref_pool.submit(run_batch_pipeline, ref_spark, db_ref_w)
 
-    applied = {"n": 0}
-
-    def crashing_sink(batch_df: DataFrame, batch_id: int) -> None:
-        sig_map, class_map = load_maps(
-            spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-        )
-        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
-        applied["n"] += 1
-        if applied["n"] == 2:
-            # AFTER apply: the batch is in the star + ledger, but the
-            # stream dies before the checkpoint commit log records it
-            raise RuntimeError("injected crash after commit")
-
-    alerts = read_spools(spark, fx["spools"], streaming=True, max_files_per_trigger=1)
-    q = (
-        alerts.writeStream.foreachBatch(crashing_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    crashed = False
     try:
-        q.awaitTermination()
-    except Exception as e:  # StreamingQueryException wrapping the injection
-        if "injected crash" not in str(e):
-            raise
-        crashed = True
-    if not crashed:
-        # Raised OUTSIDE the try so the except above can never swallow it
-        # (its message would otherwise match the handler's substring): a
-        # non-firing injection must fail loudly, not degrade the audit to
-        # comparing two uninterrupted runs.
-        raise AssertionError("injected crash did not fire")
-
-    # resume from the same checkpoint + db: batch 1 re-delivers, the
-    # ledger skips it, the remaining spool files apply once each
-    run_streaming_pipeline(spark, db, ckpt)
-
-    # join the concurrently-built uninterrupted reference star; re-bind
-    # its (now fully written) path to the MAIN session so the summary
-    # frames below all live in one session
-    try:
+        _crash_then_resume(spark, db, ckpt, fx)
+        # join the concurrently-built uninterrupted reference star
         ref_fut.result()
     finally:
-        ref_pool.shutdown(wait=False)
+        # every exit path, a failed crash/resume included: drop the
+        # reference build if it has not started, else wait for it, so
+        # none of its Spark jobs outlive this query
+        ref_pool.shutdown(wait=True, cancel_futures=True)
+    # re-bind the reference star's (now fully written) path to the MAIN
+    # session so the summary frames below all live in one session
     db_ref = SnorbyDB(spark, db_ref_w.path)
 
     def star_payload(star_db) -> DataFrame:

@@ -6,7 +6,11 @@ spool is a ``binaryFile`` (stream or batch) source over the same
 directories with a filename glob; N directories union into one tagged
 stream (R4, :257-263); Structured Streaming's checkpoint replaces the
 reader bookmark (R2, :263); ``maxFilesPerTrigger`` replaces the bounded
-queue backpressure (R5, scripts/charlotte:24).
+queue backpressure (R5, scripts/charlotte:24). Each trigger admits one
+file per task slot (``defaultParallelism``) by default: a unified2 file
+is one non-splittable ``binaryFile`` task, so each micro-batch parses
+one full wave of tasks and pays the sink's per-batch fixed cost once
+per wave, and the cap grows with the cluster.
 
 Parsing (R6) + per-packet explode (R10) are fused into one Arrow
 ``mapInPandas`` pass per file — the parser emits one row per packet
@@ -132,31 +136,34 @@ def _decode_frames(batches):
         yield pd.concat([pdf.reset_index(drop=True), pd.DataFrame(out)], axis=1)
 
 
-def _tagged_binary_source(
+def _binary_source(
     spark: SparkSession,
-    directory: str,
-    sensor_name: str,
+    path: str,
+    sensor_name: str | None,
     prefix: str,
-    streaming: bool,
     max_files_per_trigger: int | None,
 ) -> DataFrame:
-    glob = f"{prefix}*" if prefix else "*"
-    if streaming:
+    """ONE ``binaryFile`` source over ``path`` as (sensor_name, content)
+    rows: streaming when ``max_files_per_trigger`` (the per-trigger
+    admission cap) is set, batch otherwise. ``sensor_name`` None takes
+    the identity from each file's parent directory (the d185
+    parent-glob shape); a name tags every file (the R4 per-directory
+    shape)."""
+    if max_files_per_trigger:
         reader = (
             spark.readStream.format("binaryFile")
-            .schema(
-                "path string, modificationTime timestamp, length long, content binary"
-            )
-            .option("pathGlobFilter", glob)
+            .schema("path string, modificationTime timestamp, length long, content binary")
+            .option("maxFilesPerTrigger", str(max_files_per_trigger))
         )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        df = reader.load(directory)
     else:
-        df = (
-            spark.read.format("binaryFile").option("pathGlobFilter", glob).load(directory)
-        )
-    return df.select(F.lit(sensor_name).alias("sensor_name"), "content")
+        reader = spark.read.format("binaryFile")
+    df = reader.option("pathGlobFilter", f"{prefix}*" if prefix else "*").load(path)
+    sensor = (
+        F.lit(sensor_name)
+        if sensor_name is not None
+        else F.regexp_extract("path", r"([^/]+)/[^/]*$", 1)
+    )
+    return df.select(sensor.alias("sensor_name"), "content")
 
 
 class RolloverListener:
@@ -234,45 +241,11 @@ def shared_parent_layout(spools: dict[str, dict]) -> tuple[str, str] | None:
     return parents.pop(), prefixes.pop()
 
 
-def _parent_glob_source(
-    spark: SparkSession,
-    parent: str,
-    prefix: str,
-    streaming: bool,
-    max_files_per_trigger: int | None,
-) -> DataFrame:
-    """ONE source over ``parent/*`` with sensor identity derived from
-    the subdirectory name (the d185 `_evo_decoded` shape, promoted to
-    the default read_spools path for shared-parent configs)."""
-    glob = f"{prefix}*" if prefix else "*"
-    if streaming:
-        reader = (
-            spark.readStream.format("binaryFile")
-            .schema(
-                "path string, modificationTime timestamp, length long, content binary"
-            )
-            .option("pathGlobFilter", glob)
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        df = reader.load(f"{parent}/*")
-    else:
-        df = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", glob)
-            .load(f"{parent}/*")
-        )
-    return df.select(
-        F.regexp_extract("path", r"([^/]+)/[^/]*$", 1).alias("sensor_name"),
-        "content",
-    )
-
-
 def read_spools(
     spark: SparkSession,
     spools: dict[str, dict],
     streaming: bool = False,
-    max_files_per_trigger: int | None = 2,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Union all spool directories into one flat, decoded alert frame.
 
@@ -289,22 +262,24 @@ def read_spools(
     the config), and a streaming caller gets a warning that growing
     the spool set later will need a NEW checkpoint (d185 documents the
     restart rule).
+
+    A stream admits at most ``max_files_per_trigger`` files per trigger
+    and source (R5 backpressure); the default is the session's task
+    slots, one parse wave per micro-batch. Pass 1 for one file per
+    batch (the R3 rollover shape).
     """
+    cap = None
+    if streaming:
+        cap = max_files_per_trigger or spark.sparkContext.defaultParallelism
     layout = shared_parent_layout(spools)
     if layout is not None:
-        src = _parent_glob_source(
-            spark, layout[0], layout[1], streaming, max_files_per_trigger
-        )
+        src = _binary_source(spark, f"{layout[0]}/*", None, layout[1], cap)
     else:
-        parts = []
-        for name, cfg in sorted(spools.items()):
-            for d in cfg["directories"]:
-                parts.append(
-                    _tagged_binary_source(
-                        spark, d, name, cfg.get("prefix", ""), streaming,
-                        max_files_per_trigger,
-                    )
-                )
+        parts = [
+            _binary_source(spark, d, name, cfg.get("prefix", ""), cap)
+            for name, cfg in sorted(spools.items())
+            for d in cfg["directories"]
+        ]
         if streaming and len(parts) > 1:
             import warnings
 

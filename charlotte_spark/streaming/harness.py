@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..schemas import EVENTS
-from ..session import local_df
 
 _counter = itertools.count()
 

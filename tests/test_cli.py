@@ -220,6 +220,97 @@ def test_cli_day2_sensor_growth_same_checkpoint(spark, tmp_path):
     assert day2["sensor_b"] == day1["sensor_b"]
 
 
+def _drain_conf(tmp_path, tag, n_files):
+    """A shared-parent backlog of ``n_files`` small spool files over two
+    sensors, each file's mtime its rollover epoch (the admission order),
+    plus a cli config that drains it into its own star."""
+    from charlotte_spark.queries.charlotte_pipeline import write_spool
+
+    fx = u2_fixture()  # only for the map files
+    parent = str(tmp_path / tag / "spools")
+    n_a = (n_files + 1) // 2
+    for sid, name, n, base in ((1, "sensor_a", n_a, 1_700_000_000),
+                               (2, "sensor_b", n_files - n_a, 1_700_100_000)):
+        for path in write_spool(f"{parent}/{name}", n_files=n, events_per_file=6,
+                                sensor_id=sid, base_second=base):
+            epoch = int(path.rsplit(".", 1)[-1])
+            os.utime(path, (epoch, epoch))
+    return {
+        "spools": {s: {"directories": [f"{parent}/{s}"], "prefix": "snort.u2"}
+                   for s in ("sensor_a", "sensor_b")},
+        "global": {
+            "signature_map": fx["sig_map"],
+            "generator_map": fx["gen_map"],
+            "classification_map": fx["class_map"],
+            "checkpoint_dir": str(tmp_path / tag / "ckpt"),
+        },
+        "plugin_snorby_parquet": {"path": str(tmp_path / tag / "star")},
+    }
+
+
+def _markers(star):
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(star, "_batches")).num_rows
+
+
+@pytest.fixture(scope="module")
+def slot_drains(spark, tmp_path_factory):
+    """cli drains of one and of one-more-than task slots' worth of files."""
+    tmp = tmp_path_factory.mktemp("slot_drains")
+    slots = spark.sparkContext.defaultParallelism
+    confs = {n: _drain_conf(tmp, f"n{n}", n) for n in (slots, slots + 1)}
+    for conf in confs.values():
+        assert run(conf, test_mode=False, follow=False, spark=spark) == 0
+    return confs
+
+
+def test_cli_drain_admits_one_file_per_task_slot(spark, slot_drains):
+    """Each trigger admits one file per task slot: a backlog of
+    ``defaultParallelism`` files commits as ONE micro-batch, one more
+    file makes two, and both stars hold every row once, under dense
+    per-sensor cids."""
+    from charlotte_spark.queries.charlotte_pipeline import _star_summary
+    from charlotte_spark.sources.u2_spark import read_spools
+    from charlotte_spark.streaming.snorby import SnorbyDB
+
+    slots = spark.sparkContext.defaultParallelism
+    for n, conf in slot_drains.items():
+        star = conf["plugin_snorby_parquet"]["path"]
+        assert _markers(star) == (1 if n == slots else 2), n
+        expected = {
+            r["sensor_name"]: r["count"]
+            for r in read_spools(spark, conf["spools"]).groupBy("sensor_name").count().collect()
+        }
+        cids: dict[str, list[int]] = {}
+        for r in _star_summary(spark, SnorbyDB(spark, star)).collect():
+            cids.setdefault(r["hostname"], []).append(r["cid"])
+        assert {h: len(c) for h, c in cids.items()} == expected, n
+        for h, c in cids.items():
+            assert sorted(c) == list(range(1, len(c) + 1)), (n, h)
+
+
+def test_explicit_max_files_per_trigger_overrides_default(spark, slot_drains, tmp_path):
+    """An explicit cap still wins over the task-slot default: one file
+    per trigger commits one marker per file, into the same star the
+    default drain built."""
+    from charlotte_spark.queries.charlotte_pipeline import (
+        _star_summary,
+        run_streaming_pipeline,
+    )
+    from charlotte_spark.streaming.snorby import SnorbyDB
+
+    n, conf = max(slot_drains.items())
+    g = conf["global"]
+    fx = {"spools": conf["spools"], "sig_map": g["signature_map"],
+          "gen_map": g["generator_map"], "class_map": g["classification_map"]}
+    db = SnorbyDB(spark, str(tmp_path / "star_one_per_trigger"))
+    run_streaming_pipeline(spark, db, str(tmp_path / "ckpt"), max_files_per_trigger=1, fx=fx)
+    assert _markers(db.path) == n
+    default_star = SnorbyDB(spark, conf["plugin_snorby_parquet"]["path"])
+    assert _star_summary(spark, db).collect() == _star_summary(spark, default_star).collect()
+
+
 def test_reference_conf_example_loads_unchanged():
     """Drop-in parity: the reference repo's OWN charlotte.conf.example
     must load and validate byte-for-byte unchanged — a reference user

@@ -365,6 +365,30 @@ def test_restart_audit_flag_has_teeth(spark):
     assert twice > once, "ledgerless re-delivery must duplicate fact rows"
 
 
+def test_restart_audit_joins_reference_build_when_drill_fails(spark, monkeypatch):
+    """d182 builds its reference star on a pool thread; when the
+    crash/resume drill fails, the query must still wait for that build
+    before raising, so none of its Spark jobs outlive the query."""
+    import time
+
+    from charlotte_spark.queries import charlotte_pipeline as cp
+
+    finished = []
+
+    def slow_reference(ref_spark, db):
+        time.sleep(1.0)
+        finished.append(db.path)
+
+    def failing_drill(*args):
+        raise RuntimeError("drill failed")
+
+    monkeypatch.setattr(cp, "run_batch_pipeline", slow_reference)
+    monkeypatch.setattr(cp, "_crash_then_resume", failing_drill)
+    with pytest.raises(RuntimeError, match="drill failed"):
+        cp.d182_restart_exactly_once(spark, "")
+    assert len(finished) == 1, "reference build still running after the query raised"
+
+
 def test_cid_sequencer_state_stays_o_sensors(spark):
     """D58 at day 2 (VERDICT r11 #5): under sustained multi-batch
     replay the sequencer's persisted state is the per-sensor last_cid
