@@ -5,7 +5,7 @@ enriches them against hot-reloadable maps, and upserts a snorby star
 schema (/root/reference/charlotte/__init__.py:253-611). These queries
 run the same pipeline Spark-first over deterministic synthetic spools
 (the driver's testdata has no unified2 binaries, so fixtures are
-generated on first use and cached under /tmp).
+generated on first use and cached under the engine scratch base).
 
 DuckDB cannot parse unified2, so the *semantic* gate is the golden
 test in tests/test_charlotte.py — a straight-line Python
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.digest import two_level_digest
+from ..operators.loopstate import BASE, scratch_dir
 from ..registry import query
 from .roundtrip import rt_digest, rt_oracle, rt_path
 from ..session import local_df
@@ -47,9 +48,7 @@ from ..sources.unified2 import write_spool
 from ..streaming.maps import load_maps
 from ..streaming.snorby import DIM_TABLES, FACT_TABLES, SnorbyDB, apply_batch, enrich
 
-from ..streaming.harness import _scratch_root
-
-FIXTURE_DIR = _scratch_root("CHARLOTTE_U2_TMP", "charlotte_u2")
+FIXTURE_DIR = f"{BASE}/u2"
 
 
 def u2_fixture(n_files: int = 3, events_per_file: int = 40) -> dict:
@@ -131,19 +130,13 @@ def _streamed_star(spark: SparkSession) -> SnorbyDB:
     pid = os.getpid()
     if pid not in _STREAMED_STAR:
         db = _fresh_db(spark, "streamed_shared")
-        ckpt = f"{db.path}_ckpt"
-        if os.path.exists(ckpt):
-            shutil.rmtree(ckpt)
-        run_streaming_pipeline(spark, db, ckpt)
+        run_streaming_pipeline(spark, db, f"{db.path}_ckpt")
         _STREAMED_STAR[pid] = db
     return _STREAMED_STAR[pid]
 
 
 def _fresh_db(spark: SparkSession, name: str) -> SnorbyDB:
-    path = f"{FIXTURE_DIR}/db_{name}_{os.getpid()}"
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    return SnorbyDB(spark, path)
+    return SnorbyDB(spark, scratch_dir(f"db_{name}"))
 
 
 def run_batch_pipeline(spark: SparkSession, db: SnorbyDB) -> None:
@@ -429,8 +422,7 @@ def r_charlotte_rollover_hook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     listener = RolloverListener()
     listener.attach(spark)
-    ckpt = f"{FIXTURE_DIR}/rollover_q_ckpt_{os.getpid()}"
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = scratch_dir("rollover_q_ckpt")
     try:
         alerts = read_spools(spark, fx["spools"], streaming=True, max_files_per_trigger=1)
         q = (
@@ -601,8 +593,6 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = u2_fixture()
     db = _fresh_db(spark, "restart_audit")
     ckpt = f"{db.path}_ckpt"
-    if os.path.exists(ckpt):
-        shutil.rmtree(ckpt)
 
     # The uninterrupted reference star is INDEPENDENT of the
     # crash/resume sequence (separate db dir, same deterministic
@@ -778,13 +768,7 @@ def d185_spool_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment: source-set growth must be a metadata event (new files
     under a stable glob), never a topology change that invalidates the
     checkpoint."""
-    root = (
-        f"{_scratch_root('CHARLOTTE_EVO_TMP', 'charlotte_evo')}"
-        f"/{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}"
-    )
-    import atexit as _atexit
-
-    _atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_dir("evo")
     parent, out, ckpt = f"{root}/spools", f"{root}/out", f"{root}/ckpt"
 
     def run_stream() -> None:

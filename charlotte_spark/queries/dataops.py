@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.portable import pround, sql_round
+from ..operators.loopstate import LoopState
 from ..operators.prefix import ordered_prefix
 from ..registry import query
 from ..session import reliable_checkpoint
@@ -1220,17 +1221,7 @@ def d192_layout_maintenance_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest is O(files) rows — KBs per shard — while the data itself
     is only ever touched by the arrival writes and the (out-of-scope
     here) physical rewrite the compaction ledger schedules."""
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
-
-    from ..streaming.harness import _scratch_root
-
-    root = (
-        f"{_scratch_root('CHARLOTTE_LAYOUT_TMP', 'charlotte_layout_loop')}"
-        f"/{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}"
-    )
-    _atexit.register(_shutil.rmtree, root, ignore_errors=True)
+    ls = LoopState(spark, "layout_loop")
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber"
@@ -1266,11 +1257,9 @@ def d192_layout_maintenance_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows", "zmin", "zmax",
         )
 
-    files_of(0).write.mode("overwrite").parquet(f"{root}/manifest_r0")
-
+    manifests = [ls.put(files_of(0), "manifest", 0)]
     for r, extra in ((1, None), (2, F.col("shard") % 2 == 1)):
-        prev = spark.read.parquet(f"{root}/manifest_r{r - 1}")
-        unioned = prev.unionByName(files_of(r, extra))
+        unioned = manifests[-1].unionByName(files_of(r, extra))
         counts = unioned.groupBy("shard").agg(F.count(F.lit(1)).alias("nf"))
         keep = unioned.join(counts, "shard").filter(
             F.col("nf") <= _D192_MAX_FILES
@@ -1290,13 +1279,10 @@ def d192_layout_maintenance_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_rows", "zmin", "zmax",
             )
         )
-        keep.unionByName(merged).write.mode("overwrite").parquet(
-            f"{root}/manifest_r{r}"
-        )
+        manifests.append(ls.put(keep.unionByName(merged), "manifest", r))
 
     out = None
-    for r in (0, 1, 2):
-        m = spark.read.parquet(f"{root}/manifest_r{r}")
+    for r, m in enumerate(manifests):
         row = m.groupBy("shard").agg(
             F.count(F.lit(1)).cast("long").alias("n_files"),
             F.sum("n_rows").cast("long").alias("n_rows"),

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import fan_out, load_table
 from ..functions.portable import pround, sql_round
 from ..functions.shingles import with_shingles
+from ..operators.loopstate import BASE, LoopState, scratch_dir
 from ..registry import query
 from ..session import reliable_checkpoint
 
@@ -473,11 +474,6 @@ def _sql_scored_pairs(corpus_sql: str) -> str:
     """
 
 
-# Monotonic per-process counter distinguishing scratch outputs of
-# repeat _min_label_components calls (same tag+pid) — see ADVICE r12.
-_CC_SCRATCH_NONCE = 0
-
-
 def _min_label_components(
     edges: DataFrame, *, max_rounds: int = 11, scratch_tag: str = "cc"
 ) -> DataFrame:
@@ -600,24 +596,8 @@ def _min_label_components(
     # materialize THROUGH the final plan before releasing the pinned
     # rounds — JVM-side scratch write, never a driver collect (the label
     # table is O(docs in dup clusters))
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
-
-    from ..streaming.harness import _scratch_root
-
-    # Per-call nonce (ADVICE r12): a repeat invocation with the same
-    # scratch_tag in one process must NOT overwrite a path an earlier
-    # call's returned DataFrame still reads; atexit cleanup matches the
-    # d184/d215 loop pattern.
-    global _CC_SCRATCH_NONCE
-    _CC_SCRATCH_NONCE += 1
-    out_dir = (
-        f"{_scratch_root('CHARLOTTE_CC_TMP', 'charlotte_cc')}"
-        f"/labels_{scratch_tag}_{_os.getpid()}_{_CC_SCRATCH_NONCE}"
-    )
-    _atexit.register(_shutil.rmtree, out_dir, ignore_errors=True)
-    labels.select("id", "lbl").write.mode("overwrite").parquet(out_dir)
+    out_dir = scratch_dir(f"cc_labels_{scratch_tag}")
+    labels.select("id", "lbl").write.parquet(out_dir)
     spark = labels.sparkSession
     for df in pinned:
         df.unpersist()
@@ -1035,10 +1015,8 @@ def d131_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus text is never re-shingled."""
     import os as _os
 
-    from ..streaming.harness import _scratch_root
-
     corpus = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sig_dir = f"{_scratch_root('CHARLOTTE_IDX_TMP', 'charlotte_lsh_idx')}/{_os.path.basename(sf_dir.rstrip('/'))}"
+    sig_dir = f"{BASE}/lsh_idx/{_os.path.basename(sf_dir.rstrip('/'))}"
     # build-once semantics: persist the corpus signatures if absent
     # (the stored index a production pipeline would maintain)
     if not _os.path.exists(f"{sig_dir}/_SUCCESS"):
@@ -1540,8 +1518,8 @@ def d181_lsh_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus mis-accepts them and hash-mismatches.
 
     Per-round state on disk: status/round_id=r (arrival verdicts) and
-    index/gen_id={{r}} (accepted-signature generations) under a
-    per-process scratch root; the declared result is computed entirely
+    index/round_id=r (accepted-signature generations) in a per-call
+    LoopState; the declared result is computed entirely
     from the persisted state (one fold over status + one fold over the
     generation tree), so the hash also proves the state survived the
     loop. Greedy-online semantics deliberately differ from d74's global
@@ -1561,43 +1539,21 @@ def d181_lsh_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared two-level bucketed fold (functions/digest.py), so no reducer
     buffers a round's accepted set."""
     from pyspark.sql import Window as W
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
 
     from ..functions.digest import two_level_digest
-    from ..streaming.harness import _scratch_root
 
-    root = (
-        f"{_scratch_root('CHARLOTTE_LOOP_TMP', 'charlotte_lsh_loop')}"
-        f"/{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}"
-    )
-    # pid-scoped scratch accumulates across interpreters (tmpfs = RAM):
-    # reclaim our own at exit; re-registering per call is harmless.
-    _atexit.register(_shutil.rmtree, root, ignore_errors=True)
+    ls = LoopState(spark, "lsh_loop")
     d = fan_out(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
     # round 0: bootstrap the persisted index + status ledger. The
     # status projection reads doc_id back off the just-written index
     # (column-pruned 1-col parquet scan) instead of re-shingling the
     # corpus through a second documents scan (r15, guide §2.3).
-    _minhash_sig(d).write.mode("overwrite").parquet(f"{root}/index/gen_id=0")
-    # explicit schema for every later multi-generation read: a
-    # generation whose arrivals ALL drop is an empty dir, which a
-    # schema-inferring read would refuse
-    sig_schema = spark.read.parquet(f"{root}/index/gen_id=0").schema
-
-    def index_gens(upto: int):  # union of generations 0..upto (one scan)
-        return spark.read.schema(sig_schema).parquet(
-            *[f"{root}/index/gen_id={g}" for g in range(upto + 1)]
-        )
-
-    index_gens(0).select(
-        "doc_id", F.lit("accepted").alias("status")
-    ).write.mode("overwrite").parquet(f"{root}/status/round_id=0")
+    index0 = ls.put(_minhash_sig(d), "index", 0)
+    ls.put(index0.select("doc_id", F.lit("accepted").alias("status")), "status", 0)
 
     for r in (1, 2):
-        index_sig = index_gens(r - 1)
+        index_sig = ls.upto("index", r - 1, index0.schema)
         batch = _arrival_batch(d, r)
         # signature WRITE as the lineage cut (the d184 pattern — one
         # compute+write pass where the r14 reliable_checkpoint paid a
@@ -1606,17 +1562,14 @@ def d181_lsh_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # within-batch probe, the status join, and the index merge as
         # parquet reads — one evaluation, no forked lineage (the a66
         # lesson), and the signature generation is loop state anyway
-        _minhash_sig(batch).write.mode("overwrite").parquet(
-            f"{root}/newsig/round_id={r}"
-        )
-        new_sig = spark.read.parquet(f"{root}/newsig/round_id={r}")
+        new_sig = ls.put(_minhash_sig(batch), "newsig", r)
         drop_idx = _lsh_match_ids(new_sig, index_sig).select(
             "doc_id", F.lit(1).alias("_di")
         )
         drop_same = _lsh_match_ids(new_sig, new_sig, same_batch=True).select(
             "doc_id", F.lit(1).alias("_db")
         )
-        (
+        status_r = ls.put(
             batch.select("doc_id")
             .join(drop_idx, "doc_id", "left")
             .join(drop_same, "doc_id", "left")
@@ -1626,15 +1579,11 @@ def d181_lsh_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .when(F.col("_db") == 1, "dropped_batch")
                 .otherwise("accepted")
                 .alias("status"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{root}/status/round_id={r}")
+            ),
+            "status",
+            r,
         )
-        accepted = (
-            spark.read.parquet(f"{root}/status/round_id={r}")
-            .filter(F.col("status") == "accepted")
-            .select("doc_id")
-        )
+        accepted = status_r.filter(F.col("status") == "accepted").select("doc_id")
         # generational append (r15): write ONLY the accepted arrivals as
         # generation r — the docstring's "amortizable with generational
         # layouts" made real. The r14 shape re-wrote the ENTIRE merged
@@ -1642,11 +1591,9 @@ def d181_lsh_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # read the union of generations instead (one multi-path scan),
         # so per-arrival index I/O is O(batch). Values are identical:
         # union-of-generations == the compacted merge, row for row.
-        new_sig.join(accepted, "doc_id", "semi").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/index/gen_id={r}")
+        ls.put(new_sig.join(accepted, "doc_id", "semi"), "index", r)
 
-    status = spark.read.parquet(f"{root}/status")
+    status = ls.all("status")
     counts = status.groupBy("round_id").agg(
         F.count(F.lit(1)).alias("n_arrived"),
         F.sum((F.col("status") == "dropped_index").cast("int"))
@@ -1668,8 +1615,8 @@ def d181_lsh_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # folded by a running sum over <= 3 per-generation counts (the r14
     # shape re-counted each compacted index: 3 scans of O(corpus) rows)
     sizes = (
-        spark.read.schema(sig_schema).parquet(f"{root}/index")
-        .groupBy(F.col("gen_id").cast("int").alias("round_id"))
+        ls.all("index")
+        .groupBy("round_id")
         .agg(F.count(F.lit(1)).alias("gen_n"))
         # bounded: <= 3 generation-count rows by construction
         .select(
@@ -1793,23 +1740,16 @@ def d200_chunk_index_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized batch instead of re-chunking it; per-round work is
     O(batch) + ONE h-keyed join against the persisted index
     (never all-pairs, the corpus is never re-chunked); the index update
-    is an anti-join + append merge-write (the d181 compaction shape);
-    and the declared result is computed entirely FROM the persisted
-    per-round ledger parquet (zero documents scans in the final plan).
+    appends only the round's never-seen hashes as a new generation (the
+    d181 shape), so index size and digest fold per-generation sums
+    instead of re-reading a merged O(index) copy; and the declared
+    result is computed entirely FROM the persisted per-round ledger
+    parquet (zero documents scans in the final plan).
     """
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
-
     from ..functions.portable import portable_hash_long
-    from ..streaming.harness import _scratch_root
     from .textstats import with_cdc_chunks
 
-    root = (
-        f"{_scratch_root('CHARLOTTE_CHUNKIDX_TMP', 'charlotte_chunk_index')}"
-        f"/{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}"
-    )
-    _atexit.register(_shutil.rmtree, root, ignore_errors=True)
+    ls = LoopState(spark, "chunk_index")
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -1835,18 +1775,18 @@ def d200_chunk_index_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import local_df, reliable_checkpoint
 
     ledger_rows = []
+    index_size = index_digest = 0
     for r in range(3):
         b = batch(r)
         # chunk the batch ONCE: the checkpointed per-doc hash arrays
-        # feed every downstream action (counts, index probe, merge) —
+        # feed every downstream action (counts, index probe, append) —
         # without it each action would re-run the chunking projection
         hashes = reliable_checkpoint(
             with_cdc_chunks(b, "t", "hs", distinct=False).select(
                 "doc_id", "ver", "hs"
             )
         )
-        occ = hashes.select(F.explode("hs").alias("h"))
-        dd = occ.select("h").distinct()
+        dd = hashes.select(F.explode("hs").alias("h")).distinct()
         # ONE pass over the checkpointed batch for both doc and
         # occurrence counts (r15, guide §1.2 — was two count() jobs)
         # bounded: 1-row aggregate
@@ -1856,13 +1796,10 @@ def d200_chunk_index_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         n_docs, n_occ = int(docs_occ["nd"]), int(docs_occ["no"])
         if r == 0:
-            # bounded: 1-row aggregate
-            n_distinct = int(dd.agg(F.count(F.lit(1))).collect()[0][0])
             n_dup = 0
             new = dd
-            idx = new.select("h", F.lit(0).alias("first_round"))
         else:
-            prev = spark.read.parquet(f"{root}/idx_r{r - 1}")
+            prev = ls.upto("index", r - 1, dd.schema)
             # O(batch) h-keyed probes against the persisted index: ONE
             # left join gives distinct AND dup counts in a single
             # distinct+join pass (was a left_semi count plus a separate
@@ -1878,16 +1815,26 @@ def d200_chunk_index_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             n_distinct, n_dup = int(dist_dup["nds"]), int(dist_dup["ndup"])
             new = dd.join(prev, "h", "left_anti")
-            idx = prev.unionByName(
-                new.select("h", F.lit(r).alias("first_round"))
+        # generational append (the d181 shape): generation r holds only
+        # the round's never-seen hashes, so the index is the union of
+        # generations 0..r and its size and membership digest are
+        # running sums of per-generation counts and hash sums (32-bit
+        # hashes: the long sums are exact)
+        # bounded: 1-row per-generation size+digest agg
+        gen = (
+            ls.put(new, "index", r)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(
+                    F.sum(portable_hash_long("h", "idx|")), F.lit(0)
+                ).alias("dig"),
             )
-        idx.write.mode("overwrite").parquet(f"{root}/idx_r{r}")
-        back = spark.read.parquet(f"{root}/idx_r{r}")
-        # bounded: 1-row per-round index size+digest agg
-        size_dig = back.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(portable_hash_long("h", "idx|")).alias("dig"),
-        ).collect()[0]
+            .collect()[0]
+        )
+        index_size += int(gen["n"])
+        index_digest += int(gen["dig"])
+        if r == 0:
+            n_distinct = index_size
         ledger_rows.append(
             (
                 r,
@@ -1896,23 +1843,23 @@ def d200_chunk_index_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_distinct,
                 n_dup,
                 n_distinct - n_dup,
-                int(size_dig["n"]),
+                index_size,
                 float(n_dup) / n_distinct,
-                int(size_dig["dig"]),
+                index_digest,
             )
         )
     # ONE ledger write for the whole loop (r15 — was three 1-row write
-    # jobs); rows are driver-built scalars either way
-    local_df(
-        spark,
-        ledger_rows,
-        "round_id long, n_docs long, n_chunk_occurrences long, "
-        "n_distinct long, n_dup_index long, n_new long, index_size long, "
-        "dup_rate_raw double, index_digest long",
-    ).write.mode("overwrite").parquet(f"{root}/ledger")
-
-    # declared result: read ONLY the persisted ledger state back
-    ledger = spark.read.parquet(f"{root}/ledger")
+    # jobs); the declared result reads ONLY that persisted state back
+    ledger = ls.put(
+        local_df(
+            spark,
+            ledger_rows,
+            "round_id long, n_docs long, n_chunk_occurrences long, "
+            "n_distinct long, n_dup_index long, n_new long, index_size long, "
+            "dup_rate_raw double, index_digest long",
+        ),
+        "ledger",
+    )
     return (
         ledger.select(
             "round_id",

@@ -153,12 +153,10 @@ def d97_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch, then releases the cached O(E) edges (d74's discipline —
     returning a lazy plan over the persisted edges would leak the cache
     for the session lifetime and skew long one-JVM bench sweeps)."""
-    import os as _os
-
-    from ..streaming.harness import _scratch_root
+    from ..operators.loopstate import scratch_dir
 
     result, edges = pagerank_plan(spark, sf_dir)
-    out_dir = f"{_scratch_root('CHARLOTTE_PR_TMP', 'charlotte_pr')}/ranks_{_os.getpid()}"
-    result.write.mode("overwrite").parquet(out_dir)
+    out_dir = scratch_dir("pr_ranks")
+    result.write.parquet(out_dir)
     edges.unpersist()
     return spark.read.parquet(out_dir).orderBy("node")

@@ -22,33 +22,28 @@ shared TWO-LEVEL bucketed fold (functions/digest.py): level 1 keyed by
 group's payloads, level 2 over <= B bounded sub-digests per group —
 the same cost class as returning the rows, safe at any group size.
 
-The scratch root is namespaced per PROCESS (ADVICE r07 #2 / r08): a
-concurrent sweep in another interpreter can no longer overwrite the
-parquet between the Spark fold and the DuckDB fold. Both folds of one
-comparison run in one interpreter (the driver imports
+The digest parquet lives under the process's scratch directory
+(operators/loopstate.py), so a concurrent sweep in another interpreter
+cannot overwrite it between the Spark fold and the DuckDB fold. Both
+folds of one comparison run in one interpreter (the driver imports
 ``__spark_entry__`` and runs query + oracle side by side), so the
-import-time token is consistent where it must be.
+import-time path is consistent where it must be. Each ``rt_digest``
+call writes a fresh directory and repoints ``rt_path(name)`` at it: the
+oracle folds the latest call's rows, and a frame returned by an earlier
+call keeps reading its own.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.digest import sql_two_level_digest, two_level_digest
-from ..streaming.harness import _scratch_root
+from ..operators.loopstate import PROC_DIR, scratch_dir
 
-RT_DIR = f"{_scratch_root('CHARLOTTE_RT_TMP', 'charlotte_rt')}/run_{os.getpid()}"
-
-# The per-process token ends the cross-process race, but it also means
-# every interpreter leaves a fresh dir behind (tmpfs = RAM); reclaim our
-# own at exit — the digest comparison always completes within one
-# process lifetime, so nothing reads it afterwards.
-atexit.register(shutil.rmtree, RT_DIR, ignore_errors=True)
+RT_DIR = f"{PROC_DIR}/rt"
 
 
 def rt_path(name: str) -> str:
@@ -72,9 +67,14 @@ def rt_digest(df: DataFrame, name: str, group_col: str) -> DataFrame:
     ``group_col`` + ``payload`` string) to parquet, read it back, and
     fold to (group, n_rows, two-level payload digest) — the counterpart
     of ``rt_oracle(name, group_col)``."""
-    out = rt_path(name)
-    df.write.mode("overwrite").parquet(out)
+    out = scratch_dir(f"rt_{name}")
+    df.write.parquet(out)
     back = df.sparkSession.read.parquet(out)
+    # atomic repoint: the oracle never sees a half-written directory
+    link = rt_path(name)
+    os.makedirs(RT_DIR, exist_ok=True)
+    os.symlink(out, f"{link}.new")
+    os.replace(f"{link}.new", link)
     return two_level_digest(
         back,
         [group_col],

@@ -43,6 +43,7 @@ from ..functions.vectors import (
     sqdist,
     to_double,
 )
+from ..operators.loopstate import LoopState
 from ..registry import query
 
 DIM = 64
@@ -1100,61 +1101,42 @@ def d184_ann_index_arrival(
     test_ann_recall_audit_is_sampled. Centroid refinement (re-running
     Lloyd steps) is deliberately out of scope: IVF index maintenance
     re-assigns cells offline, exactly as this loop's build round."""
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
-
-    from ..streaming.harness import _scratch_root
-
-    root = (
-        f"{_scratch_root('CHARLOTTE_ANN_TMP', 'charlotte_ann_loop')}"
-        f"/{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}"
-    )
-    _atexit.register(_shutil.rmtree, root, ignore_errors=True)
+    ls = LoopState(spark, "ann_loop")
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double(F.col("embedding")).alias("v")
     )
-    emb.filter(F.col("vec_id") < _D184_K).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    ).write.mode("overwrite").parquet(f"{root}/centroids")
-    cents = spark.read.parquet(f"{root}/centroids")
-
-    def _write_assign(r: int, batch) -> None:
-        _assign_cells(batch, cents).write.mode("overwrite").parquet(
-            f"{root}/assign/round_id={r}"
-        )
-
-    def postings_at(upto: int):
-        """Posting state at probe time = union of assignment
-        generations 0..upto, as ONE multi-path scan. The assignment
-        dirs ARE the posting generations (r15, the d181 generational
-        move): the r14 shape additionally re-wrote the merged
-        O(corpus) postings_r{r} every round — a write the union read
-        makes redundant, since every appended row is already persisted
-        as its round's assignment ledger."""
-        return spark.read.parquet(
-            *[f"{root}/assign/round_id={g}" for g in range(upto + 1)]
-        ).select("vec_id", "v", "cell")
+    cents = ls.put(
+        emb.filter(F.col("vec_id") < _D184_K).select(
+            F.col("vec_id").alias("cell"), F.col("v").alias("cv")
+        ),
+        "centroids",
+    )
 
     # the assignment WRITE is the lineage cut AND the round's posting
     # generation: the persisted batch feeds the probe, the exact-recall
     # side, and every later round's posting union as parquet reads
-    # (cheaper than a checkpoint's persist+count). The three per-round
-    # assignments read only (cents, emb slice) — never each other — so
-    # the three independent write jobs overlap from a thread pool
-    # (guide §2.6: back-fill the tail); the probe/recall data
-    # dependencies start strictly after the pool joins.
+    # (cheaper than a checkpoint's persist+count). The posting state at
+    # probe time is the union of assignment generations 0..r-1 (r15, the
+    # d181 generational move: no merged O(corpus) postings rewrite per
+    # round). The three per-round assignments read only (cents, emb
+    # slice) — never each other — so the three independent write jobs
+    # overlap from a thread pool (guide §2.6: back-fill the tail); the
+    # probe/recall data dependencies start strictly after the pool joins.
     from concurrent.futures import ThreadPoolExecutor
 
     from ..session import join_futures
 
+    batches = [emb.filter(F.col("vec_id") % 4 != 3)] + [
+        emb.filter(F.col("vec_id") % 8 == (3 if r == 1 else 7)) for r in (1, 2)
+    ]
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(_write_assign, 0, emb.filter(F.col("vec_id") % 4 != 3))]
-        for r in (1, 2):
-            batch = emb.filter(F.col("vec_id") % 8 == (3 if r == 1 else 7))
-            futs.append(pool.submit(_write_assign, r, batch))
+        futs = [
+            pool.submit(ls.put, _assign_cells(b, cents), "assign", r)
+            for r, b in enumerate(batches)
+        ]
         join_futures(futs)
+    assign = [f.result().select("vec_id", "v", "cell") for f in futs]
 
     # In-cell probe results and the sampled exact-recall side, for both
     # rounds: every input (assign generations = posting generations at
@@ -1164,10 +1146,8 @@ def d184_ann_index_arrival(
     # fewer job launches).
     inc_rounds, exact_rounds = [], []
     for r in (1, 2):
-        postings = postings_at(r - 1)
-        probes = spark.read.parquet(f"{root}/assign/round_id={r}").select(
-            "vec_id", "v", "cell"
-        )
+        postings = ls.upto("assign", r - 1, assign[0].schema)
+        probes = assign[r]
         inc_rounds.append(
             _probe_cells(probes, postings).select(
                 F.lit(r).alias("round_id"), "*"
@@ -1200,24 +1180,22 @@ def d184_ann_index_arrival(
     # the probe and exact-recall consolidations read only persisted
     # assignment state and write disjoint trees — overlap the two
     # independent jobs (guide §2.6)
-    def _write_incell() -> None:
-        inc_rounds[0].unionByName(inc_rounds[1]).write.mode(
-            "overwrite"
-        ).partitionBy("round_id").parquet(f"{root}/incell")
-
-    def _write_exact() -> None:
-        exact_rounds[0].unionByName(exact_rounds[1]).write.mode(
-            "overwrite"
-        ).partitionBy("round_id").parquet(f"{root}/exact")
+    def _write_rounds(rounds, name: str) -> None:
+        rounds[0].unionByName(rounds[1]).write.partitionBy("round_id").parquet(
+            ls.path(name)
+        )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        join_futures([pool.submit(_write_incell), pool.submit(_write_exact)])
+        join_futures([
+            pool.submit(_write_rounds, inc_rounds, "incell"),
+            pool.submit(_write_rounds, exact_rounds, "exact"),
+        ])
 
     # incell doubles as the assignment ledger (left-join probe keeps
     # empty-cell probes as NULL-neighbor rows), so the result is one
     # aggregation over incell ⟕ exact — both persisted loop state.
-    inc = spark.read.parquet(f"{root}/incell").select(
-        F.col("round_id").cast("int").alias("round_id"),
+    inc = ls.all("incell").select(
+        "round_id",
         "probe_id",
         "cell",
         "neighbor_id",
@@ -1225,8 +1203,8 @@ def d184_ann_index_arrival(
         "rk",
         "n_incell",
     )
-    ex = spark.read.parquet(f"{root}/exact").select(
-        F.col("round_id").cast("int").alias("round_id"),
+    ex = ls.all("exact").select(
+        "round_id",
         "probe_id",
         "neighbor_id",
         F.lit(1).alias("_m"),
@@ -1847,8 +1825,8 @@ def _d215_flags(assigned: DataFrame, idx: DataFrame) -> DataFrame:
             .alias("status"),
             F.coalesce(F.col("_ik"), F.col("_bk")).alias("kept_id"),
             # carried so the status write doubles as the keeps index
-            # (kept rows ARE generation r — see index_gens), but ONLY
-            # for kept rows: index_gens' pushed status='kept' filter
+            # (kept rows ARE generation r — see kept_upto), but ONLY
+            # for kept rows: kept_upto's pushed status='kept' filter
             # never reads a rejected row's vector, so persisting it was
             # pure write amplification — at a high dup rate the ledger
             # would carry the full embedding of every REJECTED arrival
@@ -1989,17 +1967,7 @@ def d215_semantic_dedup_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes read the kept rows back with a pushed filter; rejected
     arrivals are NOT indexed — the index carries exactly what the
     curated corpus carries."""
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
-
-    from ..streaming.harness import _scratch_root
-
-    root = (
-        f"{_scratch_root('CHARLOTTE_SEMDEDUP_TMP', 'charlotte_semdedup_loop')}"
-        f"/{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}"
-    )
-    _atexit.register(_shutil.rmtree, root, ignore_errors=True)
+    ls = LoopState(spark, "semdedup_loop")
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double(F.col("embedding")).alias("v")
@@ -2007,81 +1975,62 @@ def d215_semantic_dedup_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Injection offset unit, derived from the corpus (ADVICE r12 —
     # see _D215_COPIES). bounded: 1-row global max aggregate.
     base = int(emb.agg(F.max("vec_id")).first()[0]) + 1
-    emb.filter(F.col("vec_id") < _D184_K).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    ).write.mode("overwrite").parquet(f"{root}/centroids")
-    cents = spark.read.parquet(f"{root}/centroids")
-
-    empty_idx = spark.createDataFrame(
-        [], "vec_id long, v array<double>, cell long"
+    cents = ls.put(
+        emb.filter(F.col("vec_id") < _D184_K).select(
+            F.col("vec_id").alias("cell"), F.col("v").alias("cv")
+        ),
+        "centroids",
     )
     status_schema = (
         "vec_id long, cell long, status string, kept_id long, v array<double>"
     )
 
-    def index_gens(upto: int):
-        """Union of keep generations 0..upto as ONE multi-path scan.
-        The status write carries ``v``, so the kept rows of rounds
-        0..upto ARE the index generations (r15 second pass, guide §1.2:
-        the r15 first pass wrote each round's keeps as a separate
-        ``index/gen_id=r`` file — a read+join+write job per round whose
-        rows were a filtered copy of the status state just written one
-        job earlier). The filter/projection prune to the kept rows'
-        (vec_id, v, cell) at the parquet scan; per-arrival index I/O
-        stays O(batch)."""
-        if upto < 0:
-            return empty_idx
+    def kept_upto(r: int):
+        """Kept rows of status generations 0..r. The status write
+        carries ``v``, so the kept rows ARE the index generations (r15
+        second pass, guide §1.2: no separate per-round index write whose
+        rows were a filtered copy of the status state just written); the
+        filter/projection prune to (vec_id, v, cell) at the parquet
+        scan, so per-arrival index I/O stays O(batch)."""
         return (
-            spark.read.schema(status_schema)
-            .parquet(*[f"{root}/status/round_id={g}" for g in range(upto + 1)])
+            ls.upto("status", r, status_schema)
             .filter(F.col("status") == "kept")
             .select("vec_id", "v", "cell")
         )
 
+    assign, status_gens = [], []
     for r in (0, 1, 2):
         # the assignment WRITE is the lineage cut (the d184 pattern):
         # the persisted batch feeds the index probe and the
         # within-batch pass as parquet reads
-        _assign_cells(_d215_batch(emb, r, base), cents).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/assign/round_id={r}")
-        a = spark.read.parquet(f"{root}/assign/round_id={r}").select(
-            "vec_id", "v", "cell"
-        )
-        # the status write IS the round's index append: kept rows carry
-        # v, so index_gens reads them back with a pushed status filter —
-        # no separate generation write (r15 second pass)
-        _d215_flags(a, index_gens(r - 1)).write.mode("overwrite").parquet(
-            f"{root}/status/round_id={r}"
+        a = ls.put(_assign_cells(_d215_batch(emb, r, base), cents), "assign", r)
+        assign.append(a.select("vec_id", "v", "cell"))
+        # the status write IS the round's index append (see kept_upto)
+        status_gens.append(
+            ls.put(_d215_flags(assign[r], kept_upto(r - 1)), "status", r)
         )
 
     # Bounded exact side vs each round's PRIOR generation (the state
     # that round's dup_index decision probed). Every input is already
     # persisted loop state (assign / status — whose kept rows are the
-    # index generations), so
-    # the three per-round frames are value-identical computed here and
-    # union into ONE partitioned write instead of three in-loop write
-    # jobs (r15, guide §1.2: same passes, fewer job launches) — and the
-    # final ledger plan stays a pure state read either way.
-    miss_rounds = []
-    for r in (0, 1, 2):
-        a = spark.read.parquet(f"{root}/assign/round_id={r}").select(
-            "vec_id", "v", "cell"
+    # index generations), so the three per-round frames are
+    # value-identical computed here and union into ONE partitioned
+    # write instead of three in-loop write jobs (r15, guide §1.2: same
+    # passes, fewer job launches) — and the final ledger plan stays a
+    # pure state read either way.
+    miss_rounds = [
+        _d215_miss_stats(assign[r], status_gens[r], kept_upto(r - 1)).select(
+            F.lit(r).alias("round_id"), "cell", "n_probes", "n_missed_twin"
         )
-        st = spark.read.parquet(f"{root}/status/round_id={r}")
-        prior = index_gens(r - 1)
-        miss_rounds.append(
-            _d215_miss_stats(a, st, prior).select(
-                F.lit(r).alias("round_id"), "cell", "n_probes", "n_missed_twin"
-            )
-        )
+        for r in (0, 1, 2)
+    ]
     mr = miss_rounds[0]
     for m in miss_rounds[1:]:
         mr = mr.unionByName(m)
-    mr.write.mode("overwrite").partitionBy("round_id").parquet(f"{root}/miss")
+    mr.write.partitionBy("round_id").parquet(ls.path("miss"))
 
-    status = spark.read.parquet(f"{root}/status").select(
-        F.col("round_id").cast("int").alias("round_id"),
+    status = ls.all("status").select(
+        "round_id",
         F.col("cell").cast("int").alias("cell"),
         "vec_id",
         "status",
@@ -2106,8 +2055,8 @@ def d215_semantic_dedup_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_alias="n_arrivals",
         sum_cols={"n_dup_index": "_di", "n_dup_batch": "_db", "n_kept": "_kk"},
     )
-    miss = spark.read.parquet(f"{root}/miss").select(
-        F.col("round_id").cast("int").alias("round_id"),
+    miss = ls.all("miss").select(
+        "round_id",
         F.col("cell").cast("int").alias("cell"),
         "n_probes",
         "n_missed_twin",

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.digest import sql_two_level_digest, two_level_digest
 from ..functions.portable import pround, sql_round
+from ..operators.loopstate import scratch_dir
 from ..registry import query
 
 # Portable (doc_id, text)-binding payload for corpus round-trip digests:
@@ -39,10 +40,6 @@ _DOC_PAYLOAD_SQL = "md5(CAST(doc_id AS VARCHAR) || '|' || text)"
 
 def _doc_payload() -> F.Column:
     return F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("|"), F.col("text")))
-
-from ..streaming.harness import _scratch_root
-
-TMP = _scratch_root("CHARLOTTE_SINK_TMP", "charlotte_sinks")
 
 
 @query(
@@ -61,8 +58,8 @@ def d2_csv_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate both; equality of n and n_json proves both formats
     preserved every row."""
     nation = load_table(spark, sf_dir, "nation")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    csv_dir, json_dir = f"{TMP}/nation_csv_{sig}", f"{TMP}/nation_json_{sig}"
+    tmp = scratch_dir("sinks_nation")
+    csv_dir, json_dir = f"{tmp}/csv", f"{tmp}/json"
     nation.write.mode("overwrite").option("header", "true").csv(csv_dir)
     nation.write.mode("overwrite").json(json_dir)
     schema = "n_nationkey bigint, n_name string, n_regionkey bigint, n_comment string"
@@ -89,8 +86,7 @@ def d4_partitioned_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write orders partitioned by year, re-read, aggregate per
     partition — partition pruning applies to any year-filtered read."""
     orders = load_table(spark, sf_dir, "orders")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/orders_by_year_{sig}"
+    out = scratch_dir("sinks_orders_by_year")
     (
         orders.withColumn("order_year", F.year("o_orderdate"))
         .write.mode("overwrite")
@@ -130,8 +126,7 @@ def d99_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation buffer ever holds a per-lang corpus of md5s on one
     reducer, level 2 folds <= B sorted sub-digests per lang."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/documents_orc_{sig}"
+    out = scratch_dir("sinks_documents_orc")
     docs.write.mode("overwrite").partitionBy("lang").orc(out)
     back = spark.read.orc(out)
     return two_level_digest(
@@ -172,8 +167,7 @@ def d101_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.conv(F.substring(F.md5(F.concat(F.lit("shard|"), F.col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long")
         % 8,
     )
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/shards_{sig}"
+    out = scratch_dir("sinks_shards")
     docs.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out)
     return two_level_digest(
@@ -337,8 +331,7 @@ def d127_text_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition packing — at 100 TB both sides parallelize by file, and
     the digest is a single partial-aggregated fold."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/documents_text_{sig}"
+    out = scratch_dir("sinks_documents_text")
     docs.select("text").write.mode("overwrite").text(out)
     lines = spark.read.text(out)
     # Global two-level digest (functions/digest.py): the single-group
@@ -381,8 +374,7 @@ def d128_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator exists because corpora ARRIVE as JSONL, not because it
     should stay that way (D101's shard export is the conversion)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/documents_jsonl_{sig}"
+    out = scratch_dir("sinks_documents_jsonl")
     docs.write.mode("overwrite").partitionBy("lang").json(out)
     back = spark.read.schema(
         "doc_id long, text string, source string, n_chars long, lang string"
@@ -435,8 +427,7 @@ def d129_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema explicitly in production readers (inference-free, like
     D128)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/documents_evol_{sig}"
+    out = scratch_dir("sinks_documents_evol")
     docs.select("doc_id").write.mode("overwrite").parquet(f"{out}/batch=1")
     docs.select(
         "doc_id", (F.col("n_chars") / 100.0).alias("quality")
@@ -499,8 +490,7 @@ def d149_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the expected split from the source table (the D136
     round-trip-proof pattern)."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/documents_dirty_csv_{sig}"
+    out = scratch_dir("sinks_documents_dirty_csv")
     lines = docs.select(
         F.concat_ws(
             ",",
@@ -619,8 +609,7 @@ def d171_compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"d171 needs spark.sql.files.maxRecordsPerFile unset (got {mrpf}): "
             "the planner's files-on-disk count assumes one file per partition dir"
         )
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/fragmented_{sig}"
+    out = scratch_dir("sinks_fragmented")
     (
         d.repartition("lang", "bucket")
         .write.mode("overwrite")
@@ -684,8 +673,7 @@ def d180_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning on lang works as parquet's, but the conversion to columnar
     (D101) is the first thing the pipeline does."""
     docs = load_table(spark, sf_dir, "documents")
-    sig = os.path.basename(sf_dir.rstrip("/"))
-    out = f"{TMP}/documents_xml_{sig}"
+    out = scratch_dir("sinks_documents_xml")
     (
         docs.write.mode("overwrite")
         .partitionBy("lang")

@@ -27,6 +27,7 @@ from ..catalog import fan_out, load_table
 from ..functions.digest import sql_two_level_digest, two_level_digest
 from ..functions.portable import portable_hash_long, pround, sql_hash_long, sql_round
 from ..functions.shingles import explode_shingles
+from ..operators.loopstate import LoopState
 from ..operators.prefix import PrefixStage, ordered_prefix, ordered_prefix_chain
 from ..registry import query
 from ..session import reliable_checkpoint
@@ -1824,17 +1825,7 @@ def d187_curation_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely FROM the persisted status/index state; the global packing
     offsets ride the GROUPED distributed prefix (d186's operator —
     no per-language reducer chain even in the final fold)."""
-    import atexit as _atexit
-    import os as _os
-    import shutil as _shutil
-
-    from ..streaming.harness import _scratch_root
-
-    root = (
-        f"{_scratch_root('CHARLOTTE_CUR_TMP', 'charlotte_curation_loop')}"
-        f"/{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}"
-    )
-    _atexit.register(_shutil.rmtree, root, ignore_errors=True)
+    ls = LoopState(spark, "curation_loop")
 
     d = fan_out(_docs(spark, sf_dir).select("doc_id", "text", "lang"))
     eval_pfx = (
@@ -1848,41 +1839,27 @@ def d187_curation_arrival_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    empty_idx = spark.createDataFrame([], "h string")
-
-    def index_gens(upto: int):
-        """Union of accepted-hash generations 0..upto, one multi-path
-        scan with an explicit schema (an all-reject generation is an
-        empty dir a schema-inferring read would refuse). Generations
-        are DISJOINT by construction — an h already in the index flags
-        the arrival dup_index, never accepted — so the union IS the
-        distinct-merged index of the r14 shape, row for row."""
-        if upto < 0:
-            return empty_idx
-        return spark.read.schema(empty_idx.schema).parquet(
-            *[f"{root}/index/gen_id={g}" for g in range(upto + 1)]
-        )
-
     for r in (0, 1, 2):
-        _d187_flags(_d187_batch(d, r), index_gens(r - 1), eval_pfx).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/status/round_id={r}")
-        # generational append (r15, the d181 move): write ONLY the
+        # the index is the union of accepted-hash generations 0..r-1.
+        # Generations are DISJOINT by construction — an h already in
+        # the index flags the arrival dup_index, never accepted — so the
+        # union IS the distinct-merged index of the r14 shape, row for
+        # row. Generational append (r15, the d181 move): write ONLY the
         # round's distinct accepted hashes — the r14 shape re-read,
         # re-unioned and re-DISTINCTed the whole index every round
         # (O(index) shuffle+write per arrival); per-arrival index I/O
         # is now O(batch)
-        (
-            spark.read.parquet(f"{root}/status/round_id={r}")
-            .filter(F.col("status") == "accepted")
-            .select("h")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{root}/index/gen_id={r}")
+        index = ls.upto("index", r - 1, "h string")
+        flags = _d187_flags(_d187_batch(d, r), index, eval_pfx)
+        status_r = ls.put(flags, "status", r)
+        ls.put(
+            status_r.filter(F.col("status") == "accepted").select("h").distinct(),
+            "index",
+            r,
         )
 
-    status = spark.read.parquet(f"{root}/status").select(
-        F.col("round_id").cast("int").alias("round_id"),
+    status = ls.all("status").select(
+        "round_id",
         "lang",
         "doc_id",
         "toks",

@@ -88,324 +88,9 @@ def query(
     return deco
 
 
-# Explicit enumeration order for the driver contract. The driver's
-# correctness gate checks the FIRST 50 entries of ``queries()`` each
-# round (CORRECTNESS_r01-r11 keys == list(queries())[:50]), so insertion
-# order decides which SURVEY rows get driver evidence. Round-12 rotation
-# Driver-window rotation for ROUND 14 (VERDICT r13, Next-round #1):
-# slots 1-9 are the nine rows added in r13 after that round's window
-# was fixed (local-oracle-green only — the sole rotation debt with no
-# driver evidence), slots 10-21 the 12 r08-evidence leftovers the r13
-# window could not fit, slots 22-50 the 29 oldest r09-evidence rows.
-# Green rows take driver-confirmed coverage to 247/247 SURVEY rows
-# with no evidence older than r9; the 21 r09 leftovers lead the
-# post-boundary list so the r15 rotation inherits them automatically.
-DRIVER_ORDER: tuple[str, ...] = (
-    # ---- r14 window slots 1-9: the nine r13 additions (never driver-checked) ----
-    "d216_dp_noisy_release",
-    "d217_tokenizer_fertility",
-    "d218_salt_planner",
-    "d219_hilbert_layout",
-    "d220_nn_similarity_histogram",
-    "d221_token_bucket_throttle",
-    "d222_quality_survivor_policy",
-    "d223_decayed_heavy_hitters",
-    "a224_join_size_estimate",
-    # ---- r14 window slots 10-21: the 12 r08-evidence leftovers ----
-    "d19_cross_join",
-    "d20_range_join",
-    "d21_asof_join",
-    "d22_interval_join",
-    "d23_self_join",
-    "d24_groupby_multi_agg",
-    "q1_pricing_summary",
-    "d84_bucketed_colocated_join",
-    "d87_salted_skew_join",
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q21_waiting_supplier",
-    # ---- r14 window slots 22-50: the 29 oldest r09-evidence rows ----
-    "d165_char_entropy",
-    "d166_containment_ratio",
-    "d167_grouped_split",
-    "d168_media_type_sniff",
-    "d169_json_field_inventory",
-    "d170_dedup_yield",
-    "d171_compaction_planner",
-    "a172_streaming_hll_window",
-    "d173_token_budget_waterfill",
-    "d174_mergeable_moments",
-    "d175_embedding_dim_profile",
-    "d176_minhash_calibration",
-    "d177_zipf_fit",
-    "d178_centroid_dispersion",
-    "d179_longest_prefix_match",
-    "d180_xml_roundtrip",
-    "a66_minhash_lsh_neardup",
-    "a83_hll_sketch_union",
-    "d27_grouping_sets",
-    "d34_lag_lead",
-    "d36_range_frame",
-    "d40_hash_sample",
-    "d41_union_all_distinct",
-    "d42_intersect_all",
-    "d43_except_all",
-    "d47_conditional_null",
-    "d48_explode",
-    "d49_map_functions",
-    "d50_json_functions",
-    # ---- 50-slot window boundary ----
-    # Post-boundary: greedy most-stale order over CORRECTNESS_r* evidence
-    # (ties keep prior relative order) — the 21 r09-evidence leftovers
-    # lead so the r15 rotation inherits them (pinned by
-    # tests/test_registry_order.py::test_window_is_greedy_most_stale);
-    # then the r10/r11/r12-evidence blocks, the r13-evidence block last.
-    # A query added mid-round (no evidence yet) goes directly BELOW
-    # this comment block, before the r09 leftovers (never-checked rows
-    # are the stalest debt and must lead).
-    "d225_hybrid_rank_fusion",
-    "d226_retrieval_quality",
-    "d227_passage_retrieval",
-    "d228_mmr_rerank",
-    "a229_product_quantization",
-    "d51_hash_encoding",
-    "d52_ip_str_to_long",
-    "d53_tumbling_window",
-    "d54_sliding_window",
-    "d55_session_window",
-    "d56_watermark_late_drop",
-    "d57_streaming_dedup",
-    "d59_stream_static_join",
-    "d61_scalar_pandas_udf",
-    "d62_apply_in_pandas",
-    "d63_grouped_agg_udaf",
-    "d64_udtf_explode",
-    "d65_exact_dedup",
-    "d67_cosine_pairwise",
-    "d68_ivf_topk",
-    "d69_normalize_tokenize",
-    "d70_tf_idf",
-    "d71_langid_heuristic",
-    "d72_binary_fingerprint",
-    "d73_doc_chunking",
-    "d74_neardup_clusters",
-    "d181_lsh_arrival_loop",
-    "d182_restart_exactly_once",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customer",
-    "q19_disjunctive_revenue",
-    "q20_part_promotion",
-    "q22_idle_customers",
-    "d76_quality_repetition",
-    "d77_stratified_sample",
-    "d78_train_val_test_split",
-    "d79_contamination_screen",
-    "d80_sequence_packing",
-    "d81_mixture_rebalance",
-    "d82_custom_stateful_sessions",
-    "d85_frame_sampling",
-    "d86_kmeans",
-    "q12_late_shipment_priority",
-    "d46_math_functions",
-    "d75_embedding_quantize",
-    "r_charlotte_graceful_drain",
-    "d88_pii_redaction",
-    "d89_intradoc_line_dedup",
-    "a90_heavy_hitters",
-    "d91_pivot",
-    "d91_unpivot",
-    "d92_stream_stream_join",
-    "d93_summary_stats",
-    "a94_bloom_contamination",
-    "d95_vocab_topk",
-    "a96_countmin_sketch",
-    "d97_pagerank",
-    "d98_scd2_history",
-    "d99_orc_roundtrip",
-    "d100_temperature_sampling",
-    "d101_shard_export",
-    "d102_pca_power",
-    "d103_conversion_funnel",
-    "d104_cohort_retention",
-    "d183_curation_dag",
-    "d184_ann_index_arrival",
-    "d185_spool_evolution",
-    "d186_grouped_prefix_budget",
-    "d187_curation_arrival_loop",
-    "d33_ranking_functions",
-    "d35_running_aggregates",
-    "d37_topk_per_group",
-    "d38_multikey_sort",
-    "d39_topk_limit",
-    "d42_intersect",
-    "d43_except",
-    "d44_string_functions",
-    "d45_datetime_functions",
-    "d48_array_functions",
-    "d66_ngram_jaccard",
-    "d66_simhash",
-    "d67_embedding_neardup",
-    "d69_fingerprint",
-    "d69_quality_score",
-    "d69_token_count",
-    "d71_language_stats",
-    "a68_lsh_ann_topk",
-    "d105_fuzzy_reconcile",
-    "d106_pmi_collocations",
-    "d107_inverted_index",
-    "d108_sql_text_surface",
-    "d109_recursive_cte",
-    "d110_python_udtf",
-    "d111_session_paths",
-    "d112_histogram",
-    "d113_chi_square",
-    "d114_grouped_regression",
-    "d115_ohlc_downsample",
-    "d116_dup_ngram_spans",
-    "d117_bm25_retrieval",
-    "d118_semantic_dedup",
-    "d119_ewma_smoothing",
-    "d120_robust_anomalies",
-    "d121_snapshot_diff",
-    "d122_weighted_sample",
-    "d123_bigram_lm_score",
-    "d124_span_removal",
-    "d125_quantile_calibration",
-    "d127_text_binary_roundtrip",
-    "d128_jsonl_roundtrip",
-    "d129_schema_evolution",
-    "d130_cidr_enrichment",
-    "d131_incremental_dedup",
-    "d132_skew_profile",
-    "d188_bpe_merges",
-    "d189_training_shuffle",
-    "d190_zonemap_pruning",
-    "d191_point_in_time_features",
-    "d192_layout_maintenance_loop",
-    "d193_bpe_tokenize",
-    "d194_index_migration_audit",
-    "d195_cdc_chunking",
-    "d196_context_truncation",
-    "d197_preference_pairs",
-    "d198_rle_bitmap_index",
-    "d199_curriculum_schedule",
-    "d200_chunk_index_loop",
-    "a201_histogram_quantile_sketch",
-    "d202_tokenizer_migration",
-    "d203_matryoshka_audit",
-    "d204_curation_config_diff",
-    "d205_liveness_gaps",
-    "d206_padding_waste",
-    "d207_bootstrap_ci",
-    "d208_contribution_bounding",
-    "d209_cross_source_dup_matrix",
-    "d210_source_divergence_matrix",
-    "a211_horvitz_thompson_total",
-    "d212_cluster_chaining_audit",
-    "d213_concat_chunk_packing",
-    "d214_hard_negative_mining",
-    "a134_selfjoin_size",
-    "d133_equidepth_stats",
-    "d135_distribution_windows",
-    "d136_merge_upsert",
-    "d137_gapfill_interpolate",
-    "d138_triangle_count",
-    "d139_ks_drift",
-    "d140_k_anonymity",
-    "d141_constraint_audit",
-    "d142_zorder_layout",
-    "d143_woe_iv_binning",
-    "d144_ab_proportion_test",
-    "d145_benford_audit",
-    "d146_association_rules",
-    "d147_total_reconciliation",
-    "d148_seasonal_baseline",
-    "d149_corrupt_quarantine",
-    "d150_fd_profiling",
-    "d151_touch_attribution",
-    "d152_winsorize_scale",
-    "d153_time_travel",
-    "d154_bounce_dwell",
-    "d155_growth_accounting",
-    "d215_semantic_dedup_arrival",
-    "d156_revenue_concentration",
-    "d126_transform_with_state",
-    "d58_cid_sequencer_stream",
-    "d60_foreachbatch_upsert",
-    "d68_topk_bruteforce",
-    "d72_decode_pipeline",
-    "r_charlotte_rollover_hook",
-    "r_charlotte_event_records",
-    "r_charlotte_ingest_decode",
-    "r_charlotte_batch_pipeline",
-    "r_charlotte_text_mode",
-    "a160_hll_intersection",
-    "a31_approx_count_distinct",
-    "a32_approx_quantiles",
-    "d1_scan_rowcounts",
-    "d157_url_curation",
-    "d158_boilerplate_lines",
-    "d159_curation_scorecard",
-    "d161_incremental_rollup",
-    "d162_streaming_psi_drift",
-    "d163_bloom_semijoin_reduction",
-    "d164_vocab_coverage_curve",
-    "d25_global_agg",
-    "d26_count_distinct",
-    "d27_rollup",
-    "d27_cube",
-    "d28_filtered_agg",
-    "d29_collect_list_set",
-    "d30_first_last_ordered",
-    "d32x_exact_percentile",
-    "d3_jdbc_scan",
-    "d5_jdbc_sink",
-    "d6_file_stream_checkpoint",
-    "d1_scan_checksum_lineitem",
-    "d2_csv_json_scan",
-    "d4_partitioned_parquet_sink",
-    "d7_select_rename",
-    "d8_computed_projection",
-    "d9_predicates",
-    "d10_null_semantics",
-    "d11_in_list",
-    "d12_like_regexp",
-    "d13_distinct",
-    "d14_inner_equijoin",
-    "d15_broadcast_dim_join",
-    "d16_left_outer_join",
-    "d16_full_outer_join",
-    "d17_left_semi_join",
-    "d18_left_anti_join",
-)
-
-# How many leading entries of queries() the driver's correctness gate
-# has historically checked; tests assert the window composition.
-DRIVER_WINDOW = 50
-
-
 def load_all_queries() -> dict[str, Query]:
-    """Import every query module (idempotent) and return the registry,
-    enumerated in driver-priority order (``DRIVER_ORDER`` first, then
-    remaining queries in module registration order)."""
+    """Import every query module (idempotent) and return the registry in
+    registration order."""
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    ordered: dict[str, Query] = {}
-    for name in DRIVER_ORDER:
-        ordered[name] = REGISTRY[name]  # KeyError = typo in DRIVER_ORDER
-    for name, q in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
+    return dict(REGISTRY)

@@ -20,6 +20,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from .operators.loopstate import _scratch_root
+
 # Shuffle partitions: match local cores while testing; on a real cluster
 # AQE coalesces the post-shuffle partitions anyway, so a higher initial
 # number (e.g. 2000 for 100 TB inputs) only affects the pre-AQE plan.
@@ -69,12 +71,7 @@ def reliable_checkpoint(df: DataFrame) -> DataFrame:
     sc = df.sparkSession.sparkContext
     with _CKPT_DIR_LOCK:  # concurrent callers (a229) must not race the init
         if sc.getCheckpointDir() is None:
-            base = os.environ.get("CHARLOTTE_CKPT_DIR") or (
-                "/dev/shm/charlotte_ckpt"
-                if os.access("/dev/shm", os.W_OK)
-                else "/tmp/charlotte_ckpt"
-            )
-            sc.setCheckpointDir(base)
+            sc.setCheckpointDir(_scratch_root("CHARLOTTE_CKPT_DIR", "charlotte_ckpt"))
     cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     out = cached.checkpoint(eager=True)
     cached.unpersist()

@@ -23,22 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.loopstate import BASE, scratch_dir
 from ..schemas import EVENTS
 
 _counter = itertools.count()
-
-def _scratch_root(env: str, leaf: str) -> str:
-    """tmpfs-backed scratch when available: every micro-batch fsyncs
-    offset/commit logs, so checkpoint latency is the streaming replay's
-    fixed cost. On a cluster this is durable storage by necessity; for
-    the local harness RAM is the honest equivalent of a fast DFS."""
-    if os.environ.get(env):
-        return os.environ[env]
-    base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else "/tmp"
-    return f"{base}/{leaf}"
-
-
-STREAM_TMP = _scratch_root("CHARLOTTE_STREAM_TMP", "charlotte_stream")
 
 # Shared sentinel timestamp: far past every real event window, so one
 # chunk-dir materialization (shuffled + sentinel) serves every registry
@@ -62,7 +50,7 @@ def events_chunk_dir(
     sig = hashlib.md5(
         f"{sf_dir}|{n_chunks}|{shuffle_chunks}|{sentinel_ts}".encode()
     ).hexdigest()[:12]
-    out = f"{STREAM_TMP}/src_{sig}"
+    out = f"{BASE}/stream/src_{sig}"
     marker = f"{out}/_READY"
     if os.path.exists(marker):
         return out
@@ -208,7 +196,8 @@ def run_to_memory(
     The count is locked into the checkpoint at first batch."""
     spark = sdf.sparkSession
     name = f"stream_sink_{next(_counter)}"
-    ckpt = f"{STREAM_TMP}/ckpt_{name}_{os.getpid()}"
+    state = scratch_dir(name)
+    ckpt, rows_dir = f"{state}/ckpt", f"{state}/rows"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -231,7 +220,6 @@ def run_to_memory(
     # rows), then release the temp view and the tmpfs checkpoint: a long
     # session otherwise accumulates one memory-sink table + one
     # RAM-backed checkpoint dir per streaming query.
-    rows_dir = f"{STREAM_TMP}/rows_{name}_{os.getpid()}"
     out.coalesce(4).write.mode("overwrite").parquet(rows_dir)
     spark.catalog.dropTempView(name)
     shutil.rmtree(ckpt, ignore_errors=True)

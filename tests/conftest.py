@@ -16,16 +16,8 @@ import duckdb
 import numpy as np
 import pytest
 
-# Namespace the round-trip digest scratch BEFORE any query module can
-# bake paths into oracle SQL strings. Since r9, RT_DIR itself appends a
-# per-process run token (ADVICE r07 #2), so this env override is belt
-# and braces: it also moves pytest scratch out of the production
-# default root entirely. Within this process write and fold always
-# agree because both read the same module-level constant.
-os.environ.setdefault("CHARLOTTE_RT_TMP", f"/tmp/charlotte_rt_pytest_{os.getpid()}")
-
-from charlotte_spark.catalog import TABLE_NAMES  # noqa: E402
-from charlotte_spark.session import get_spark  # noqa: E402
+from charlotte_spark.catalog import TABLE_NAMES
+from charlotte_spark.session import get_spark
 
 # t1 smoke scale by default for speed; CI can point at sf0.01 (t2 scale).
 SF_DIR = os.environ.get("CHARLOTTE_TEST_SF_DIR", "/root/testdata/sf0.01")

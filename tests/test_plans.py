@@ -381,9 +381,9 @@ def test_every_collect_site_is_bounded():
         "joins.py": 1,        # d163: ≤m bloom bit positions (same class)
         "textstats.py": 1,    # d188: the ONE argmax merge rule per BPE round
         "dataops.py": 1,      # d198: 1-row global max -> 64 probe ids
-        "dedup.py": 4,        # d200: four 1-row per-round scalar aggs (docs+occ
-                              # fold, r0 distinct count, distinct+dup join fold,
-                              # index size+digest) — each "# bounded:" commented
+        "dedup.py": 3,        # d200: three 1-row per-round scalar aggs (docs+occ
+                              # fold, distinct+dup join fold, generation
+                              # size+digest) — each "# bounded:" commented
     }
     found: dict[str, int] = {}
     for p in root.rglob("*.py"):

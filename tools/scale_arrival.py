@@ -62,7 +62,7 @@ from charlotte_spark.queries.similarity import (  # noqa: E402
     _d215_miss_stats,
 )
 from charlotte_spark.session import get_spark  # noqa: E402
-from charlotte_spark.streaming.harness import _scratch_root  # noqa: E402
+from charlotte_spark.operators.loopstate import scratch_dir  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 BATCH_SCALES = (4, 16, 64)
@@ -72,10 +72,6 @@ DIM = 64
 K_PER_INDEX_SCALE = 8  # d215: cells per 1x of index (density held constant)
 BATCH_EXP_BOUND = 1.35   # same wobble band as scale_trend.py
 INDEX_EXP_BOUND = 1.0    # sub-linear: probe must not degenerate to all-pairs
-
-
-def _root() -> str:
-    return f"{_scratch_root('CHARLOTTE_ARR_TMP', 'charlotte_arrival')}/{os.getpid()}"
 
 
 def _docs_replicated(spark, scale: int, tag: str, extra: tuple = ()):
@@ -210,9 +206,7 @@ def _d215_round(spark, batch_path: str, index_path: str, cents_path: str) -> Non
 def run(runs_per_point: int = 2) -> dict:
     spark = get_spark("charlotte-scale-arrival")
     spark.sparkContext.setLogLevel("ERROR")
-    root = _root()
-    if os.path.exists(root):
-        shutil.rmtree(root)
+    root = scratch_dir("arrival")
     os.makedirs(root)
 
     report: dict = {

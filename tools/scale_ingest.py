@@ -29,10 +29,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from charlotte_spark.operators.loopstate import scratch_dir  # noqa: E402
 from charlotte_spark.session import get_spark  # noqa: E402
 from charlotte_spark.sources.u2_spark import read_spools  # noqa: E402
 from charlotte_spark.sources.unified2 import write_spool  # noqa: E402
-from charlotte_spark.streaming.harness import _scratch_root  # noqa: E402
 from charlotte_spark.streaming.maps import load_maps  # noqa: E402
 from charlotte_spark.streaming.snorby import (  # noqa: E402
     SENSOR_SCHEMA,
@@ -41,7 +41,7 @@ from charlotte_spark.streaming.snorby import (  # noqa: E402
     enrich,
 )
 
-BASE = _scratch_root("CHARLOTTE_SCALE_TMP", "charlotte_scale")
+BASE = scratch_dir("scale")
 N_SENSORS = 4
 
 

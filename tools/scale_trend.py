@@ -42,7 +42,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from charlotte_spark.registry import load_all_queries  # noqa: E402
 from charlotte_spark.session import get_spark  # noqa: E402
-from charlotte_spark.streaming.harness import _scratch_root  # noqa: E402
+from charlotte_spark.operators.loopstate import scratch_dir  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 SCALES = (4, 16, 64)
@@ -68,9 +68,7 @@ MAX_EXPONENT = 1.35  # linear + AQE/planning wobble; >1 drift = super-linear
 
 
 def _build_scaled(spark, scale: int) -> str:
-    root = f"{_scratch_root('CHARLOTTE_TREND_TMP', 'charlotte_trend')}/x{scale}_{os.getpid()}"
-    if os.path.exists(root):
-        shutil.rmtree(root)
+    root = scratch_dir(f"trend_x{scale}")
     os.makedirs(root)
     for t in TABLES:
         src = f"{BASE_SF}/{t}.parquet"

@@ -40,15 +40,6 @@ def canon(v):
 
 
 def main(sf_dir: str, cpus: str) -> int:
-    # Per-run round-trip scratch: the sweep must never share RT_DIR with
-    # a concurrently-running driver check at another SF, or each side
-    # overwrites the other's materialized parquet between the Spark fold
-    # and the DuckDB fold (ADVICE r07). Set BEFORE __spark_entry__ loads
-    # the query modules, which bake the path into oracle SQL strings.
-    os.environ.setdefault(
-        "CHARLOTTE_RT_TMP",
-        f"/tmp/charlotte_rt_sweep_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "__spark_entry__.py")
