@@ -99,17 +99,10 @@ def bench_ingest(spark) -> dict:
     as a phantom ingest 'regression' in r02."""
     import shutil
 
-    from charlotte_spark.queries.charlotte_pipeline import (
-        _fresh_db,
-        run_streaming_pipeline,
-        u2_fixture,
-    )
+    from charlotte_spark.cli import drain, star_sink
+    from charlotte_spark.queries.charlotte_pipeline import _fresh_db, u2_fixture
 
     def one_replay(fx: dict, tag: str, i: int) -> float:
-        # NOTE r15 measurement-bug fix: the fixture is now PASSED to the
-        # pipeline. run_streaming_pipeline used to re-derive the default
-        # 200-event fixture internally, so every bench before r15 timed
-        # a 200-event replay while reporting this fixture's event count.
         db = _fresh_db(spark, f"bench_ingest_{tag}_{i}")
         ckpt = f"{db.path}_ckpt"
         if os.path.exists(ckpt):
@@ -119,7 +112,8 @@ def bench_ingest(spark) -> dict:
         # pre-r13 per-source-union protocol (3/source then meant all 5
         # files in batch 0; the r13 shared-parent single source would
         # split 3+2 and pay a phantom extra micro-batch of overhead)
-        run_streaming_pipeline(spark, db, ckpt, max_files_per_trigger=6, fx=fx)
+        drain(spark, fx["spools"], star_sink(spark, fx["global"], db), ckpt,
+              max_files_per_trigger=6)
         return time.perf_counter() - t0
 
     def fx_events(fx: dict, events_per_file: int) -> int:

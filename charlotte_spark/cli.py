@@ -27,11 +27,18 @@ for the spool glob prefix.
 
 from __future__ import annotations
 
+import hashlib
 import json
+import os
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .session import get_spark
+from .sources.u2_spark import read_spools
+from .streaming.maps import load_maps
+from .streaming.snorby import SnorbyDB, apply_batch, enrich
 
 
 class ConfigError(Exception):
@@ -101,44 +108,78 @@ def u2fast_line(proto_col=None):
     )
 
 
-def run(config: dict, test_mode: bool, follow: bool, spark: SparkSession | None = None) -> int:
-    from .session import get_spark
-    from .sources.u2_spark import read_spools
-    from .streaming.maps import load_maps
-    from .streaming.snorby import SnorbyDB, apply_batch, enrich
-
-    spark = spark or get_spark("charlotte")
-    alerts = read_spools(spark, config["spools"], streaming=True)
-
-    # Default checkpoint dir is keyed by (config content, mode): a fixed
-    # shared path would make test mode and sink mode (or two differently
-    # configured runs) share source offsets, silently draining nothing on
-    # the second run — the reference daemon's test mode never consumes
-    # spool position (ADVICE r02).
-    import hashlib as _hashlib
-    import json as _json
-
-    _cfg_key = _hashlib.md5(
-        (_json.dumps(config, sort_keys=True, default=str)
-         + f"|mode={'test' if test_mode else 'sink'}").encode()
-    ).hexdigest()[:12]
-    ckpt = (
-        config.get("global", {}).get("checkpoint_dir")
-        or f"/tmp/charlotte_cli_ckpt_{_cfg_key}"
+def enriched(spark: SparkSession, maps: dict, alerts: DataFrame) -> DataFrame:
+    """R15: re-read the three map files named in ``maps`` (the config's
+    ``global`` section), then enrich ``alerts``. Called once per
+    micro-batch, so an edited map applies from the next batch on."""
+    sig_map, class_map = load_maps(
+        spark, maps["signature_map"], maps["generator_map"], maps["classification_map"]
     )
+    return enrich(alerts, sig_map, class_map)
+
+
+def star_sink(spark: SparkSession, maps: dict, db):
+    """The foreachBatch body that upserts each enriched batch into the
+    snorby star ``db``; a batch run is this body called once as batch 0."""
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        apply_batch(db, enriched(spark, maps, batch_df), batch_id)
+
+    return body
+
+
+def drain(
+    spark: SparkSession,
+    spools: dict,
+    body,
+    ckpt: str,
+    max_files_per_trigger: int | None = None,
+    follow: bool = False,
+) -> None:
+    """Stream ``spools`` through the foreachBatch ``body`` under the
+    checkpoint ``ckpt``: drain what is there now (``availableNow``) and
+    return, or with ``follow`` keep tailing until stopped."""
+    alerts = read_spools(
+        spark, spools, streaming=True, max_files_per_trigger=max_files_per_trigger
+    )
+    writer = alerts.writeStream.foreachBatch(body).option("checkpointLocation", ckpt)
+    if not follow:
+        writer = writer.trigger(availableNow=True)
+    writer.start().awaitTermination()
+
+
+def _default_checkpoint(config: dict, test_mode: bool) -> str:
+    """The checkpoint a run uses when ``global.checkpoint_dir`` is unset.
+
+    A sink run keys on its target star: the star's applied-batch ledger
+    is keyed by batch id, so a second checkpoint over the same star would
+    restart batch ids at 0 and have every batch skipped as already
+    applied — editing the config (say, adding a sensor) must not switch
+    checkpoints. Test mode writes no star and never consumes spool
+    position (ADVICE r02), so it keys on the whole config."""
+    if test_mode:
+        target = json.dumps(config, sort_keys=True, default=str)
+    elif "plugin_snorby_parquet" in config:
+        target = os.path.abspath(config["plugin_snorby_parquet"]["path"])
+    else:
+        db = config["plugin_snortdb"]
+        target = f"{db['server']}/{db['db']}"
+    key = hashlib.md5(
+        f"{target}|mode={'test' if test_mode else 'sink'}".encode()
+    ).hexdigest()[:12]
+    return f"/tmp/charlotte_cli_ckpt_{key}"
+
+
+def run(config: dict, test_mode: bool, follow: bool, spark: SparkSession | None = None) -> int:
+    spark = spark or get_spark("charlotte")
+    maps = config["global"]
 
     if test_mode:
-        # R22: per-batch map reload (R15) + formatted console lines.
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            sig_map, class_map = load_maps(
-                spark,
-                config["global"]["signature_map"],
-                config["global"]["generator_map"],
-                config["global"]["classification_map"],
-            )
-            e = enrich(batch_df, sig_map, class_map)
+        # R22: formatted console lines instead of the star
+        def body(batch_df: DataFrame, batch_id: int) -> None:
             lines = (
-                e.select(
+                enriched(spark, maps, batch_df)
+                .select(
                     "sensor_name", "event_id",
                     F.coalesce("packet_pos", F.lit(-1)).alias("packet_pos"),
                     u2fast_line().alias("line"),
@@ -161,23 +202,10 @@ def run(config: dict, test_mode: bool, follow: bool, spark: SparkSession | None 
                 f"jdbc:mysql://{dbcfg['server']}/{dbcfg['db']}",
                 {"user": dbcfg["user"], "password": dbcfg["password"]},
             )
+        body = star_sink(spark, maps, db)
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            sig_map, class_map = load_maps(
-                spark,
-                config["global"]["signature_map"],
-                config["global"]["generator_map"],
-                config["global"]["classification_map"],
-            )
-            apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
-
-    writer = alerts.writeStream.foreachBatch(sink).option("checkpointLocation", ckpt)
-    if follow:
-        q = writer.start()
-        q.awaitTermination()  # daemon mode: runs until externally stopped
-    else:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
+    ckpt = maps.get("checkpoint_dir") or _default_checkpoint(config, test_mode)
+    drain(spark, config["spools"], body, ckpt, follow=follow)
     return 0
 
 

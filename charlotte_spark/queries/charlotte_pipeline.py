@@ -38,6 +38,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cli import drain, enriched, star_sink, u2fast_line
 from ..functions.digest import two_level_digest
 from ..operators.loopstate import BASE, scratch_dir
 from ..registry import query
@@ -45,8 +46,7 @@ from .roundtrip import rt_digest, rt_oracle, rt_path
 from ..session import local_df
 from ..sources.u2_spark import read_spools
 from ..sources.unified2 import write_spool
-from ..streaming.maps import load_maps
-from ..streaming.snorby import DIM_TABLES, FACT_TABLES, SnorbyDB, apply_batch, enrich
+from ..streaming.snorby import DIM_TABLES, FACT_TABLES, SnorbyDB
 
 FIXTURE_DIR = f"{BASE}/u2"
 
@@ -61,18 +61,19 @@ def u2_fixture(n_files: int = 3, events_per_file: int = 40) -> dict:
     recommends (VERDICT r12 #6: the old <base>/a|b naming made every
     CLI/pipeline test take the warned legacy union path).
     ``spools_legacy`` preserves that non-shared shape for the tests
-    that cover the legacy union path explicitly."""
-    sig = f"v5_{n_files}x{events_per_file}"
+    that cover the legacy union path explicitly. The map files sit in
+    ``global``, the config section ``cli.run`` reads them from."""
+    sig = f"v6_{n_files}x{events_per_file}"
     base = f"{FIXTURE_DIR}/{sig}"
     marker = f"{base}/_READY"
     spools = {
         "sensor_a": {"directories": [f"{base}/sensor_a"], "prefix": "snort.u2"},
         "sensor_b": {"directories": [f"{base}/sensor_b"], "prefix": "snort.u2"},
     }
-    paths = {
-        "sig_map": f"{base}/sid-msg.map",
-        "gen_map": f"{base}/gen-msg.map",
-        "class_map": f"{base}/classification.config",
+    maps = {
+        "signature_map": f"{base}/sid-msg.map",
+        "generator_map": f"{base}/gen-msg.map",
+        "classification_map": f"{base}/classification.config",
     }
     if not os.path.exists(marker):
         write_spool(
@@ -88,26 +89,16 @@ def u2_fixture(n_files: int = 3, events_per_file: int = 40) -> dict:
             sensor_id=2,
             base_second=1_700_100_000,
         )
-        with open(paths["sig_map"], "w") as f:
+        with open(maps["signature_map"], "w") as f:
             for s in range(20):
                 f.write(f"{1_000_000 + s} || Known Signature {s}\n")
-        with open(paths["gen_map"], "w") as f:
+        with open(maps["generator_map"], "w") as f:
             f.write("# generator map\n2 || 1 || Generator Two Alert\n")
-        with open(paths["class_map"], "w") as f:
+        with open(maps["classification_map"], "w") as f:
             for i in range(1, 6):
                 f.write(f"config classification: class-{i},Class {i} Description,{i}\n")
         with open(marker, "w") as f:
             f.write("ok")
-    # Spark's file stream source orders files by mtime at MILLISECOND
-    # granularity; on tmpfs the whole fixture lands in one ms and batch
-    # order (hence cross-batch cid sequencing) goes nondeterministic.
-    # Real snort spools roll over seconds apart — stamp each file with
-    # the epoch embedded in its name to reproduce that.
-    for spool in spools.values():
-        for d in spool["directories"]:
-            for fname in os.listdir(d):
-                epoch = int(fname.rsplit(".", 1)[-1])
-                os.utime(f"{d}/{fname}", (epoch, epoch))
     # Same files under config names that do NOT match the directory
     # basenames — the genuinely legacy (non-shared-parent) shape, for
     # the tests that pin the union-path warning.
@@ -115,7 +106,7 @@ def u2_fixture(n_files: int = 3, events_per_file: int = 40) -> dict:
         "sensor_one": spools["sensor_a"],
         "sensor_two": spools["sensor_b"],
     }
-    return {"spools": spools, "spools_legacy": spools_legacy, **paths}
+    return {"global": maps, "spools": spools, "spools_legacy": spools_legacy}
 
 
 _STREAMED_STAR: dict[int, SnorbyDB] = {}
@@ -130,7 +121,12 @@ def _streamed_star(spark: SparkSession) -> SnorbyDB:
     pid = os.getpid()
     if pid not in _STREAMED_STAR:
         db = _fresh_db(spark, "streamed_shared")
-        run_streaming_pipeline(spark, db, f"{db.path}_ckpt")
+        fx = u2_fixture()
+        # 3 files per trigger: a 2-micro-batch replay, so cross-batch cid
+        # sequencing and dim upserts are exercised at a fraction of the
+        # per-batch fixed cost
+        drain(spark, fx["spools"], star_sink(spark, fx["global"], db),
+              f"{db.path}_ckpt", max_files_per_trigger=3)
         _STREAMED_STAR[pid] = db
     return _STREAMED_STAR[pid]
 
@@ -140,53 +136,9 @@ def _fresh_db(spark: SparkSession, name: str) -> SnorbyDB:
 
 
 def run_batch_pipeline(spark: SparkSession, db: SnorbyDB) -> None:
-    """Whole-input batch run: spools → parse/decode → enrich → snorby."""
+    """Whole-input batch run: the stream's foreachBatch body called once."""
     fx = u2_fixture()
-    alerts = read_spools(spark, fx["spools"], streaming=False)
-    sig_map, class_map = load_maps(
-        spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-    )
-    apply_batch(db, enrich(alerts, sig_map, class_map), batch_id=0)
-
-
-def run_streaming_pipeline(
-    spark: SparkSession,
-    db: SnorbyDB,
-    ckpt: str,
-    max_files_per_trigger: int = 3,
-    fx: dict | None = None,
-) -> None:
-    """Streaming run over the spools (R1/R2/R5/D60). Default 3 files per
-    trigger → a 2-micro-batch replay: still exercises cross-batch cid
-    sequencing / dim upserts at a fraction of the per-batch fixed cost;
-    tests that need strict one-file-per-batch pass 1 explicitly.
-
-    ``fx`` selects the spool fixture (default: the 200-event
-    ``u2_fixture()``). Until r15 this was silently pinned to the
-    default, which made bench.py's ingest leg time a 200-event replay
-    while REPORTING its own 10k-event fixture's count — the measurement
-    bug behind the cross-round ingest whipsaw (4,679–6,894 "ev/s" of
-    pure stream-start fixed cost; VERDICT r14 "What's wrong")."""
-    fx = u2_fixture() if fx is None else fx  # `is None` IS the contract:
-    # an (erroneous) empty dict must fail loudly, not silently time the
-    # default fixture — the r15 ingest-leg bug class (ADVICE r15)
-    alerts = read_spools(
-        spark, fx["spools"], streaming=True, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sig_map, class_map = load_maps(  # R15: maps re-read every batch
-            spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-        )
-        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
-
-    q = (
-        alerts.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    star_sink(spark, fx["global"], db)(read_spools(spark, fx["spools"]), 0)
 
 
 def _star_summary(spark: SparkSession, db: SnorbyDB) -> DataFrame:
@@ -295,12 +247,8 @@ def r_charlotte_text_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     in production this DataFrame goes to `.writeStream.format("console")`.
     The lines fold to per-sensor round-trip digests, so the driver hash
     pins the exact rendered text."""
-    from ..cli import u2fast_line
-
     fx = u2_fixture()
-    alerts = read_spools(spark, fx["spools"], streaming=False)
-    sig_map, class_map = load_maps(spark, fx["sig_map"], fx["gen_map"], fx["class_map"])
-    e = enrich(alerts, sig_map, class_map)
+    e = enriched(spark, fx["global"], read_spools(spark, fx["spools"]))
     rows = e.select(
         "sensor_name",
         F.concat_ws(
@@ -514,29 +462,20 @@ def _crash_then_resume(spark: SparkSession, db: SnorbyDB, ckpt: str, fx: dict) -
     """d182's drill: a one-file-per-batch stream whose sink crashes
     right after applying batch 1, then a resume from the same
     checkpoint and star."""
+    sink = star_sink(spark, fx["global"], db)
     applied = {"n": 0}
 
     def crashing_sink(batch_df: DataFrame, batch_id: int) -> None:
-        sig_map, class_map = load_maps(
-            spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-        )
-        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
+        sink(batch_df, batch_id)
         applied["n"] += 1
         if applied["n"] == 2:
             # AFTER apply: the batch is in the star + ledger, but the
             # stream dies before the checkpoint commit log records it
             raise RuntimeError("injected crash after commit")
 
-    alerts = read_spools(spark, fx["spools"], streaming=True, max_files_per_trigger=1)
-    q = (
-        alerts.writeStream.foreachBatch(crashing_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     crashed = False
     try:
-        q.awaitTermination()
+        drain(spark, fx["spools"], crashing_sink, ckpt, max_files_per_trigger=1)
     except Exception as e:  # StreamingQueryException wrapping the injection
         if "injected crash" not in str(e):
             raise
@@ -550,7 +489,7 @@ def _crash_then_resume(spark: SparkSession, db: SnorbyDB, ckpt: str, fx: dict) -
 
     # resume from the same checkpoint + db: batch 1 re-delivers, the
     # ledger skips it, the remaining spool files apply once each
-    run_streaming_pipeline(spark, db, ckpt)
+    drain(spark, fx["spools"], sink, ckpt, max_files_per_trigger=3)
 
 
 @query(
@@ -632,8 +571,6 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("payload"),
         )
 
-    from ..functions.digest import two_level_digest
-
     restarted = rt_digest(star_payload(db), "restart_exactly_once", "hostname")
     reference = two_level_digest(
         star_payload(db_ref),
@@ -666,40 +603,6 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _evo_decoded(spark: SparkSession, parent: str, streaming: bool) -> DataFrame:
-    """ONE binaryFile source over a parent-directory glob, sensor
-    identity derived from the subdirectory name. This is the
-    evolution-safe R4 shape: Structured Streaming forbids changing the
-    NUMBER or type of sources across a checkpoint restart, so
-    read_spools' union-per-directory cannot grow at day 2 — but a new
-    subdirectory under one glob source is just new FILES to the same
-    source, which the file-source seen-files log admits incrementally."""
-    from ..sources.u2_spark import DECODED_SCHEMA, _parse_and_decode
-
-    schema = "path string, modificationTime timestamp, length long, content binary"
-    if streaming:
-        src = (
-            spark.readStream.format("binaryFile")
-            .schema(schema)
-            .option("pathGlobFilter", "snort.u2*")
-            # 2 files/trigger: still multi-batch per phase (the resume
-            # crosses batch boundaries), half the fixed micro-batch cost
-            .option("maxFilesPerTrigger", "2")
-            .load(f"{parent}/*")
-        )
-    else:
-        src = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "snort.u2*")
-            .load(f"{parent}/*")
-        )
-    tagged = src.select(
-        F.regexp_extract("path", r"([^/]+)/snort\.u2", 1).alias("sensor_name"),
-        "content",
-    )
-    return tagged.mapInPandas(_parse_and_decode, DECODED_SCHEMA)
-
-
 def _evo_payload(decoded: DataFrame) -> DataFrame:
     return decoded.select(
         "sensor_name",
@@ -713,15 +616,6 @@ def _evo_payload(decoded: DataFrame) -> DataFrame:
             F.coalesce(F.col("ip_dst"), F.lit("-")),
         ).alias("payload"),
     )
-
-
-def _stamp_spool_mtimes(directory: str) -> None:
-    """Stamp each spool file with the epoch embedded in its name (the
-    u2_fixture determinism rule: tmpfs lands a whole fixture in one
-    mtime millisecond, making file order nondeterministic)."""
-    for fname in os.listdir(directory):
-        epoch = int(fname.rsplit(".", 1)[-1])
-        os.utime(f"{directory}/{fname}", (epoch, epoch))
 
 
 @query(
@@ -752,7 +646,7 @@ def d185_spool_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     source over the sensor PARENT glob (``spools/*``), sensor identity
     derived from the subdirectory name; adding a sensor is mkdir + the
     snort instance writing its first rollover — no plan change, no new
-    source (documented in _evo_decoded).
+    source (``read_spools`` compiles the shared-parent layout to it).
 
     Phases: (1) stream sensor_a's 3-file spool to a parquet sink with
     availableNow + checkpoint; (2) a NEW sensor_c directory appears
@@ -771,9 +665,15 @@ def d185_spool_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = scratch_dir("evo")
     parent, out, ckpt = f"{root}/spools", f"{root}/out", f"{root}/ckpt"
 
-    def run_stream() -> None:
+    def spools(*names: str) -> dict:
+        return {n: {"directories": [f"{parent}/{n}"], "prefix": "snort.u2"} for n in names}
+
+    def run_stream(*names: str) -> None:
+        # 2 files/trigger: still multi-batch per phase (the resume
+        # crosses batch boundaries), half the fixed micro-batch cost
+        stream = read_spools(spark, spools(*names), streaming=True, max_files_per_trigger=2)
         q = (
-            _evo_payload(_evo_decoded(spark, parent, streaming=True))
+            _evo_payload(stream)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -784,8 +684,7 @@ def d185_spool_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # phase 1: the original deployment — one sensor directory
     write_spool(f"{parent}/sensor_a", n_files=3, events_per_file=40, sensor_id=1)
-    _stamp_spool_mtimes(f"{parent}/sensor_a")
-    run_stream()
+    run_stream("sensor_a")
 
     # phase 2: day-2 change — a new snort instance's spool appears
     write_spool(
@@ -795,15 +694,14 @@ def d185_spool_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         sensor_id=2,
         base_second=1_700_200_000,
     )
-    _stamp_spool_mtimes(f"{parent}/sensor_c")
     # phase 3: resume from the SAME checkpoint with the grown spool set
-    run_stream()
+    run_stream("sensor_a", "sensor_c")
 
     streamed = rt_digest(
         spark.read.parquet(out), "spool_evolution", "sensor_name"
     )
     truth = two_level_digest(
-        _evo_payload(_evo_decoded(spark, parent, streaming=False)),
+        _evo_payload(read_spools(spark, spools("sensor_a", "sensor_c"))),
         ["sensor_name"],
         F.col("payload"),
         count_alias="n_ref",

@@ -398,7 +398,13 @@ def write_spool(
 ) -> list[str]:
     """Write deterministic unified2 spool files with a REALISTIC record
     mix — legacy v1 (7), VLAN v2 (104, what modern Snort emits), IPv6
-    (72) and IPv6-VLAN (105) events — returns file paths."""
+    (72) and IPv6-VLAN (105) events — returns file paths.
+
+    Each file's mtime is the rollover epoch in its name. Spark's file
+    stream source admits files in mtime order at millisecond
+    granularity; on tmpfs a whole spool lands in one millisecond and
+    batch order (hence cross-batch cid sequencing) would go
+    nondeterministic, where real snort spools roll over seconds apart."""
     os.makedirs(out_dir, exist_ok=True)
     paths = []
     eid = 0
@@ -437,5 +443,6 @@ def write_spool(
                     )
                 if eid % 13 == 0:
                     f.write(pack_extra_data(sensor_id, eid, sec, 2, b"x%d" % eid))
+        os.utime(path, (base_second + fi, base_second + fi))
         paths.append(path)
     return paths

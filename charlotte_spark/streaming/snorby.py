@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.net import ip_str_to_long
 from ..session import join_futures, local_df
 
 FACT_TABLES = ("event", "iphdr", "tcphdr", "udphdr", "icmphdr", "data")
@@ -115,17 +116,6 @@ class SnorbyDB:
             return self.spark.read.parquet(self._tdir(name))
         return local_df(self.spark, [], schema)
 
-    def overwrite(self, name: str, df: DataFrame) -> None:
-        tmp = self._tdir(f"_{name}_tmp")
-        def write():
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        with_retry(write)
-        final = self._tdir(name)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-        self._small.pop(name, None)  # cache may now be stale
-
     def append(self, name: str, df: DataFrame) -> None:
         with_retry(lambda: df.write.mode("append").parquet(self._tdir(name)))
 
@@ -146,8 +136,8 @@ class SnorbyDB:
 
     def overwrite_small(self, name: str, rows: list[dict], schema: str) -> None:
         """Atomic driver-side overwrite: write one parquet part into a
-        temp dir, rename over the table dir (same protocol `overwrite`
-        uses, minus the Spark job — these tables are KBs)."""
+        temp dir, rename it over the table dir (no Spark job — these
+        tables are KBs)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -434,18 +424,8 @@ def _apply_batch_body(
         "iphdr": a.filter(F.col("ip_ver").isNotNull()).select(
             "sid",
             "cid",
-            F.expr(
-                "cast(split(ip_src, '\\\\.')[0] as bigint) * 16777216 + "
-                "cast(split(ip_src, '\\\\.')[1] as bigint) * 65536 + "
-                "cast(split(ip_src, '\\\\.')[2] as bigint) * 256 + "
-                "cast(split(ip_src, '\\\\.')[3] as bigint)"
-            ).alias("ip_src"),
-            F.expr(
-                "cast(split(ip_dst, '\\\\.')[0] as bigint) * 16777216 + "
-                "cast(split(ip_dst, '\\\\.')[1] as bigint) * 65536 + "
-                "cast(split(ip_dst, '\\\\.')[2] as bigint) * 256 + "
-                "cast(split(ip_dst, '\\\\.')[3] as bigint)"
-            ).alias("ip_dst"),
+            ip_str_to_long(F.col("ip_src")).alias("ip_src"),
+            ip_str_to_long(F.col("ip_dst")).alias("ip_dst"),
             "ip_ver",
             "ip_hlen",
             "ip_tos",

@@ -41,7 +41,8 @@ def _read_spool_files(fx):
 
 def _load_maps_golden(fx):
     sig = {}
-    with open(fx["sig_map"]) as f:
+    maps = fx["global"]
+    with open(maps["signature_map"]) as f:
         for line in f:
             line = line.strip()
             if not line or line.startswith("#"):
@@ -50,7 +51,7 @@ def _load_maps_golden(fx):
             sig[(1, int(parts[0]))] = {
                 "rev": 1, "classid": 0, "priority": 0, "msg": parts[1]
             }
-    with open(fx["gen_map"]) as f:
+    with open(maps["generator_map"]) as f:
         for line in f:
             line = line.strip()
             if not line or line.startswith("#"):
@@ -61,7 +62,7 @@ def _load_maps_golden(fx):
             }
     classes = {}
     cid = 0
-    with open(fx["class_map"]) as f:
+    with open(maps["classification_map"]) as f:
         for line in f:
             if line.strip().startswith("config classification:"):
                 cid += 1
@@ -265,15 +266,13 @@ def test_last_cid_persisted(spark, star):
 
 
 def test_streaming_equals_batch(spark):
-    """The streaming pipeline (one micro-batch per file) produces the
+    """The streaming pipeline (three files per micro-batch) produces the
     same star as the batch pipeline — stream-equals-batch for the full
     charlotte DAG, including cross-batch dim reuse and cid continuation."""
     import os
     import shutil
 
-    from charlotte_spark.queries.charlotte_pipeline import (
-        run_streaming_pipeline,
-    )
+    from charlotte_spark.cli import drain, star_sink
 
     db_b = _fresh_db(spark, "seb_batch")
     run_batch_pipeline(spark, db_b)
@@ -281,7 +280,8 @@ def test_streaming_equals_batch(spark):
     ckpt = f"{db_s.path}_ckpt"
     if os.path.exists(ckpt):
         shutil.rmtree(ckpt)
-    run_streaming_pipeline(spark, db_s, ckpt)
+    fx = u2_fixture()
+    drain(spark, fx["spools"], star_sink(spark, fx["global"], db_s), ckpt, max_files_per_trigger=3)
 
     # signature surrogate ids are assigned first-seen-per-batch in
     # streaming vs globally in batch, so compare the id-independent star

@@ -11,8 +11,18 @@ import shutil
 
 import pytest
 
-from charlotte_spark.cli import ConfigError, load_config, main, run, validate_snortdb
-from charlotte_spark.queries.charlotte_pipeline import u2_fixture
+from charlotte_spark.cli import (
+    ConfigError,
+    drain,
+    load_config,
+    main,
+    run,
+    star_sink,
+    validate_snortdb,
+)
+from charlotte_spark.queries.charlotte_pipeline import _star_summary, u2_fixture
+from charlotte_spark.sources.unified2 import write_spool
+from charlotte_spark.streaming.snorby import SnorbyDB
 
 
 def _write_conf(tmp_path, overrides=None, drop=None):
@@ -22,11 +32,7 @@ def _write_conf(tmp_path, overrides=None, drop=None):
             name: {"directories": cfg["directories"], "filename": cfg["prefix"]}
             for name, cfg in fx["spools"].items()
         },
-        "global": {
-            "signature_map": fx["sig_map"],
-            "generator_map": fx["gen_map"],
-            "classification_map": fx["class_map"],
-        },
+        "global": fx["global"],
         "plugin_snorby_parquet": {"path": str(tmp_path / "star")},
     }
     for k, v in (overrides or {}).items():
@@ -106,8 +112,6 @@ def test_cli_db_mode_writes_star(spark, tmp_path):
 def _shared_parent_spools(parent):
     """A config in the evolution-safe layout: <parent>/<sensor_name>/
     with one common prefix (VERDICT r10 #7)."""
-    from charlotte_spark.queries.charlotte_pipeline import write_spool
-
     write_spool(f"{parent}/sensor_a", n_files=2, events_per_file=10, sensor_id=1)
     write_spool(
         f"{parent}/sensor_b", n_files=1, events_per_file=10, sensor_id=2,
@@ -181,30 +185,17 @@ def test_cli_day2_sensor_growth_same_checkpoint(spark, tmp_path):
     mkdir + first rollover is the whole day-2 change), and the SAME
     run definition resumes from the SAME checkpoint: the new sensor's
     events land, already-applied sensors don't reprocess."""
-    from charlotte_spark.queries.charlotte_pipeline import write_spool
-
-    fx = u2_fixture()  # only for the map files
     parent = str(tmp_path / "spools")
     conf = {
         "spools": _shared_parent_spools(parent),
-        "global": {
-            "signature_map": fx["sig_map"],
-            "generator_map": fx["gen_map"],
-            "classification_map": fx["class_map"],
-            "checkpoint_dir": str(tmp_path / "ckpt"),
-        },
+        # the fixture only for its map files
+        "global": {**u2_fixture()["global"], "checkpoint_dir": str(tmp_path / "ckpt")},
         "plugin_snorby_parquet": {"path": str(tmp_path / "star")},
     }
     star = conf["plugin_snorby_parquet"]["path"]
 
-    def per_sensor_events():
-        ev = spark.read.parquet(os.path.join(star, "event"))
-        se = spark.read.parquet(os.path.join(star, "sensor"))
-        rows = ev.join(se, "sid").groupBy("hostname").count().collect()
-        return {r["hostname"]: r["count"] for r in rows}
-
     assert run(conf, test_mode=False, follow=False, spark=spark) == 0
-    day1 = per_sensor_events()
+    day1 = _per_sensor_events(spark, star)
     assert set(day1) == {"sensor_a", "sensor_b"} and all(day1.values())
 
     write_spool(
@@ -212,7 +203,7 @@ def test_cli_day2_sensor_growth_same_checkpoint(spark, tmp_path):
         base_second=1_700_200_000,
     )
     assert run(conf, test_mode=False, follow=False, spark=spark) == 0
-    day2 = per_sensor_events()
+    day2 = _per_sensor_events(spark, star)
     assert set(day2) == {"sensor_a", "sensor_b", "sensor_c"}
     assert day2["sensor_c"] > 0, "day-2 sensor must flow in"
     # nothing replayed for the already-applied sensors
@@ -220,30 +211,100 @@ def test_cli_day2_sensor_growth_same_checkpoint(spark, tmp_path):
     assert day2["sensor_b"] == day1["sensor_b"]
 
 
+def test_cli_default_checkpoint_follows_the_star(spark, tmp_path):
+    """Without ``checkpoint_dir`` a sink run's default checkpoint is
+    keyed on the star it writes, not on the whole config: adding a
+    day-2 sensor to both the spool parent and the config resumes the
+    same stream, and the new sensor's events land. Keyed on the config,
+    the edit started a second checkpoint whose batch ids restart at 0,
+    so the star's applied-batch ledger skipped every batch of the new
+    stream and the run still exited 0."""
+    from charlotte_spark.cli import _default_checkpoint
+
+    parent = str(tmp_path / "spools")
+    conf = {
+        "spools": _shared_parent_spools(parent),
+        "global": u2_fixture()["global"],
+        "plugin_snorby_parquet": {"path": str(tmp_path / "star")},
+    }
+    star = conf["plugin_snorby_parquet"]["path"]
+    try:
+        assert run(conf, test_mode=False, follow=False, spark=spark) == 0
+        day1 = _per_sensor_events(spark, star)
+        assert set(day1) == {"sensor_a", "sensor_b"}
+
+        write_spool(
+            f"{parent}/sensor_c", n_files=1, events_per_file=10, sensor_id=3,
+            base_second=1_700_200_000,
+        )
+        conf["spools"]["sensor_c"] = {
+            "directories": [f"{parent}/sensor_c"], "prefix": "snort.u2",
+        }
+        assert run(conf, test_mode=False, follow=False, spark=spark) == 0
+        day2 = _per_sensor_events(spark, star)
+        assert day2 == {**day1, "sensor_c": day2.get("sensor_c", 0)}
+        assert day2["sensor_c"] > 0, "the edited config's new sensor must land"
+    finally:
+        shutil.rmtree(_default_checkpoint(conf, test_mode=False), ignore_errors=True)
+
+
+def _per_sensor_events(spark, star):
+    ev = spark.read.parquet(os.path.join(star, "event"))
+    se = spark.read.parquet(os.path.join(star, "sensor"))
+    rows = ev.join(se, "sid").groupBy("hostname").count().collect()
+    return {r["hostname"]: r["count"] for r in rows}
+
+
+def test_maps_reload_every_micro_batch(spark, tmp_path):
+    """R15: the three maps are re-read for every micro-batch. Streaming
+    one spool file per trigger over copies of the map files, a
+    signature message rewritten after batch 0 names the later batches'
+    events, while batch 0's events keep the message they landed with."""
+    fx = u2_fixture()
+    maps = {}
+    for key, path in fx["global"].items():
+        maps[key] = str(tmp_path / os.path.basename(path))
+        shutil.copy(path, maps[key])
+    db = SnorbyDB(spark, str(tmp_path / "star"))
+    sink = star_sink(spark, maps, db)
+    batch0 = []
+
+    def body(batch_df, batch_id):
+        sink(batch_df, batch_id)
+        if batch_id == 0:
+            batch0.extend(_star_summary(spark, db).collect())
+            with open(maps["signature_map"]) as f:
+                text = f.read()
+            with open(maps["signature_map"], "w") as f:
+                f.write(text.replace("|| Known Signature 1\n", "|| Edited Signature 1\n"))
+
+    drain(spark, fx["spools"], body, str(tmp_path / "ckpt"), max_files_per_trigger=1)
+
+    first = {(r["hostname"], r["cid"]) for r in batch0}
+    star = _star_summary(spark, db).collect()
+    assert len(first) < len(star), "the fixture must stream more than one batch"
+    assert [r for r in star if (r["hostname"], r["cid"]) in first] == batch0
+    old = {r["sig_name"] for r in batch0}
+    later = {r["sig_name"] for r in star if (r["hostname"], r["cid"]) not in first}
+    assert "Known Signature 1" in old and "Edited Signature 1" not in old
+    assert "Edited Signature 1" in later and "Known Signature 1" not in later
+
+
 def _drain_conf(tmp_path, tag, n_files):
     """A shared-parent backlog of ``n_files`` small spool files over two
     sensors, each file's mtime its rollover epoch (the admission order),
     plus a cli config that drains it into its own star."""
-    from charlotte_spark.queries.charlotte_pipeline import write_spool
-
-    fx = u2_fixture()  # only for the map files
     parent = str(tmp_path / tag / "spools")
     n_a = (n_files + 1) // 2
     for sid, name, n, base in ((1, "sensor_a", n_a, 1_700_000_000),
                                (2, "sensor_b", n_files - n_a, 1_700_100_000)):
-        for path in write_spool(f"{parent}/{name}", n_files=n, events_per_file=6,
-                                sensor_id=sid, base_second=base):
-            epoch = int(path.rsplit(".", 1)[-1])
-            os.utime(path, (epoch, epoch))
+        write_spool(f"{parent}/{name}", n_files=n, events_per_file=6,
+                    sensor_id=sid, base_second=base)
     return {
         "spools": {s: {"directories": [f"{parent}/{s}"], "prefix": "snort.u2"}
                    for s in ("sensor_a", "sensor_b")},
-        "global": {
-            "signature_map": fx["sig_map"],
-            "generator_map": fx["gen_map"],
-            "classification_map": fx["class_map"],
-            "checkpoint_dir": str(tmp_path / tag / "ckpt"),
-        },
+        # the fixture only for its map files
+        "global": {**u2_fixture()["global"], "checkpoint_dir": str(tmp_path / tag / "ckpt")},
         "plugin_snorby_parquet": {"path": str(tmp_path / tag / "star")},
     }
 
@@ -270,9 +331,7 @@ def test_cli_drain_admits_one_file_per_task_slot(spark, slot_drains):
     ``defaultParallelism`` files commits as ONE micro-batch, one more
     file makes two, and both stars hold every row once, under dense
     per-sensor cids."""
-    from charlotte_spark.queries.charlotte_pipeline import _star_summary
     from charlotte_spark.sources.u2_spark import read_spools
-    from charlotte_spark.streaming.snorby import SnorbyDB
 
     slots = spark.sparkContext.defaultParallelism
     for n, conf in slot_drains.items():
@@ -294,18 +353,10 @@ def test_explicit_max_files_per_trigger_overrides_default(spark, slot_drains, tm
     """An explicit cap still wins over the task-slot default: one file
     per trigger commits one marker per file, into the same star the
     default drain built."""
-    from charlotte_spark.queries.charlotte_pipeline import (
-        _star_summary,
-        run_streaming_pipeline,
-    )
-    from charlotte_spark.streaming.snorby import SnorbyDB
-
     n, conf = max(slot_drains.items())
-    g = conf["global"]
-    fx = {"spools": conf["spools"], "sig_map": g["signature_map"],
-          "gen_map": g["generator_map"], "class_map": g["classification_map"]}
     db = SnorbyDB(spark, str(tmp_path / "star_one_per_trigger"))
-    run_streaming_pipeline(spark, db, str(tmp_path / "ckpt"), max_files_per_trigger=1, fx=fx)
+    drain(spark, conf["spools"], star_sink(spark, conf["global"], db),
+          str(tmp_path / "ckpt"), max_files_per_trigger=1)
     assert _markers(db.path) == n
     default_star = SnorbyDB(spark, conf["plugin_snorby_parquet"]["path"])
     assert _star_summary(spark, db).collect() == _star_summary(spark, default_star).collect()

@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from charlotte_spark.cli import star_sink
 from charlotte_spark.queries.charlotte_pipeline import (
     _fresh_db,
     _star_summary,
@@ -19,8 +20,6 @@ from charlotte_spark.queries.charlotte_pipeline import (
     u2_fixture,
 )
 from charlotte_spark.sinks.jdbc import JdbcSnorbyDB
-from charlotte_spark.streaming.maps import load_maps
-from charlotte_spark.streaming.snorby import apply_batch, enrich
 from charlotte_spark.sources.u2_spark import read_spools
 
 DERBY = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
@@ -31,11 +30,11 @@ def test_jdbc_snorby_pipeline_matches_parquet_star(spark):
     jdb = JdbcSnorbyDB(spark, url, DERBY)
 
     fx = u2_fixture()
-    alerts = read_spools(spark, fx["spools"], streaming=False)
-    sig_map, class_map = load_maps(spark, fx["sig_map"], fx["gen_map"], fx["class_map"])
-    apply_batch(jdb, enrich(alerts, sig_map, class_map), batch_id=0)
+    alerts = read_spools(spark, fx["spools"])
+    sink = star_sink(spark, fx["global"], jdb)
+    sink(alerts, 0)
     # idempotent replay: the applied-batch marker must short-circuit
-    apply_batch(jdb, enrich(alerts, sig_map, class_map), batch_id=0)
+    sink(alerts, 0)
 
     ref_db = _fresh_db(spark, "jdbc_ref")
     run_batch_pipeline(spark, ref_db)

@@ -12,12 +12,14 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from charlotte_spark.cli import drain, enriched, star_sink
 from charlotte_spark.queries.charlotte_pipeline import (
     _fresh_db,
     _star_summary,
     run_batch_pipeline,
-    run_streaming_pipeline,
+    u2_fixture,
 )
+from charlotte_spark.sources.u2_spark import read_spools
 from charlotte_spark.streaming.harness import events_stream, run_to_memory
 from charlotte_spark.streaming.snorby import with_retry
 
@@ -119,41 +121,27 @@ def test_snorby_restart_recovery(spark):
     """Kill the streaming pipeline mid-run (sink raises after 2
     micro-batches), restart from the same checkpoint + db, and the final
     star equals a clean batch run — no duplicates, no loss."""
-    from charlotte_spark.queries.charlotte_pipeline import u2_fixture
-    from charlotte_spark.sources.u2_spark import read_spools
-    from charlotte_spark.streaming.maps import load_maps
-    from charlotte_spark.streaming.snorby import apply_batch
-
     fx = u2_fixture()
     db = _fresh_db(spark, "restart")
     ckpt = f"{db.path}_ckpt"
     if os.path.exists(ckpt):
         shutil.rmtree(ckpt)
 
+    sink = star_sink(spark, fx["global"], db)
     applied = {"n": 0}
 
     def crashing_sink(batch_df, batch_id):
         if applied["n"] >= 2:
             raise RuntimeError("injected crash")
-        sig_map, class_map = load_maps(spark, fx["sig_map"], fx["gen_map"], fx["class_map"])
-        from charlotte_spark.streaming.snorby import enrich
-
-        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
+        sink(batch_df, batch_id)
         applied["n"] += 1
 
-    alerts = read_spools(spark, fx["spools"], streaming=True, max_files_per_trigger=1)
-    q = (
-        alerts.writeStream.foreachBatch(crashing_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination()
+        drain(spark, fx["spools"], crashing_sink, ckpt, max_files_per_trigger=1)
 
     # resume: same checkpoint, same db; Spark replays the failed batch
     # (idempotent via applied-batch ids) and finishes the rest
-    run_streaming_pipeline(spark, db, ckpt)
+    drain(spark, fx["spools"], sink, ckpt, max_files_per_trigger=3)
 
     db_ref = _fresh_db(spark, "restart_ref")
     run_batch_pipeline(spark, db_ref)
@@ -167,11 +155,10 @@ def test_snorby_restart_recovery(spark):
     )
 
 
-def test_rollover_listener_fires_per_file(spark):
+def test_rollover_listener_fires_per_file(spark, tmp_path):
     """R3: with maxFilesPerTrigger=1 each micro-batch is one spool file,
     so the rollover listener observes one progress event per file."""
-    from charlotte_spark.queries.charlotte_pipeline import u2_fixture
-    from charlotte_spark.sources.u2_spark import RolloverListener, read_spools
+    from charlotte_spark.sources.u2_spark import RolloverListener
 
     fx = u2_fixture()
     # the shared-parent fixture compiles to ONE source, so
@@ -188,7 +175,7 @@ def test_rollover_listener_fires_per_file(spark):
         alerts = read_spools(spark, fx["spools"], streaming=True, max_files_per_trigger=1)
         q = (
             alerts.writeStream.format("noop")
-            .option("checkpointLocation", f"/tmp/charlotte_u2/rollover_ckpt_{os.getpid()}")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -206,7 +193,7 @@ def test_rollover_listener_fires_per_file(spark):
     assert len(fired) >= n_files, f"expected ≥{n_files} rollovers, saw {len(fired)}"
 
 
-def test_graceful_drain_on_stop(spark):
+def test_graceful_drain_on_stop(spark, tmp_path):
     """R23: stopping after processAllAvailable leaves no partial batch —
     every applied batch is complete, so the star equals the batch run
     (the availableNow path in test_charlotte.py covers full drain; this
@@ -217,14 +204,17 @@ def test_graceful_drain_on_stop(spark):
         agg.writeStream.format("memory")
         .queryName("drain_sink")
         .outputMode("complete")
-        .option("checkpointLocation", f"/tmp/charlotte_stream/drain_ckpt_{os.getpid()}")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    got = {r["event_type"]: r["n"] for r in spark.table("drain_sink").collect()}
+    try:
+        got = {r["event_type"]: r["n"] for r in spark.table("drain_sink").collect()}
+    finally:
+        spark.catalog.dropTempView("drain_sink")
     want = {
         r["event_type"]: r["n"]
         for r in spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -342,25 +332,14 @@ def test_restart_audit_flag_has_teeth(spark):
     applied-batch ledger does when Spark replays after a crash) must
     add duplicate fact rows — so the d182 digest comparison flips its
     flag and the driver hash goes red."""
-    from charlotte_spark.queries.charlotte_pipeline import (
-        _fresh_db,
-        _star_summary,
-        u2_fixture,
-    )
-    from charlotte_spark.sources.u2_spark import read_spools
-    from charlotte_spark.streaming.maps import load_maps
-    from charlotte_spark.streaming.snorby import _apply_batch_body, enrich
+    from charlotte_spark.streaming.snorby import _apply_batch_body
 
     fx = u2_fixture()
     db = _fresh_db(spark, "ledgerless")
-    alerts = read_spools(spark, fx["spools"], streaming=False)
-    sig_map, class_map = load_maps(
-        spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-    )
-    enriched = enrich(alerts, sig_map, class_map)
-    _apply_batch_body(db, enriched, 0)
+    batch = enriched(spark, fx["global"], read_spools(spark, fx["spools"]))
+    _apply_batch_body(db, batch, 0)
     once = _star_summary(spark, db).count()
-    _apply_batch_body(db, enriched, 0)  # ledgerless re-delivery
+    _apply_batch_body(db, batch, 0)  # ledgerless re-delivery
     twice = _star_summary(spark, db).count()
     assert twice > once, "ledgerless re-delivery must duplicate fact rows"
 
@@ -402,14 +381,7 @@ def test_cid_sequencer_state_stays_o_sensors(spark):
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.scale_ingest import _state_snapshot
 
-    from charlotte_spark.queries.charlotte_pipeline import u2_fixture
-    from charlotte_spark.sources.u2_spark import read_spools
-    from charlotte_spark.streaming.maps import load_maps
-    from charlotte_spark.streaming.snorby import (
-        SENSOR_SCHEMA,
-        apply_batch,
-        enrich,
-    )
+    from charlotte_spark.streaming.snorby import SENSOR_SCHEMA
 
     fx = u2_fixture()
     db = _fresh_db(spark, "sustained_state")
@@ -417,25 +389,16 @@ def test_cid_sequencer_state_stays_o_sensors(spark):
     if os.path.exists(ckpt):
         shutil.rmtree(ckpt)
 
+    sink = star_sink(spark, fx["global"], db)
     series = []
 
-    def sink(batch_df, batch_id):
-        sig_map, class_map = load_maps(
-            spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-        )
-        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
+    def observed(batch_df, batch_id):
+        sink(batch_df, batch_id)
         snap = _state_snapshot(db.path)
         snap["state_rows"] = len(db.read_small("sensor", SENSOR_SCHEMA))
         series.append(snap)
 
-    alerts = read_spools(spark, fx["spools"], streaming=True, max_files_per_trigger=1)
-    q = (
-        alerts.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, fx["spools"], observed, ckpt, max_files_per_trigger=1)
 
     assert len(series) >= 3, f"fixture should yield >=3 micro-batches: {len(series)}"
     # State is O(sensors SEEN), never O(events): with the shared-parent

@@ -29,17 +29,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from charlotte_spark.cli import drain, star_sink  # noqa: E402
 from charlotte_spark.operators.loopstate import scratch_dir  # noqa: E402
 from charlotte_spark.session import get_spark  # noqa: E402
 from charlotte_spark.sources.u2_spark import read_spools  # noqa: E402
 from charlotte_spark.sources.unified2 import write_spool  # noqa: E402
-from charlotte_spark.streaming.maps import load_maps  # noqa: E402
-from charlotte_spark.streaming.snorby import (  # noqa: E402
-    SENSOR_SCHEMA,
-    SnorbyDB,
-    apply_batch,
-    enrich,
-)
+from charlotte_spark.streaming.snorby import SENSOR_SCHEMA, SnorbyDB  # noqa: E402
 
 BASE = scratch_dir("scale")
 N_SENSORS = 4
@@ -71,26 +66,22 @@ def build_fixture(events_per_file: int, n_files: int) -> dict:
             sensor_id=s,
             base_second=1_700_000_000 + s * 1_000_000,
         )
-        # distinct mtimes => deterministic file order (see u2_fixture)
-        for fname in os.listdir(d):
-            epoch = int(fname.rsplit(".", 1)[-1])
-            os.utime(f"{d}/{fname}", (epoch, epoch))
         spools[f"sensor_{s}"] = {"directories": [d], "prefix": "snort.u2"}
         total += events_per_file * n_files
-    paths = {
-        "sig_map": f"{BASE}/sid-msg.map",
-        "gen_map": f"{BASE}/gen-msg.map",
-        "class_map": f"{BASE}/classification.config",
+    maps = {
+        "signature_map": f"{BASE}/sid-msg.map",
+        "generator_map": f"{BASE}/gen-msg.map",
+        "classification_map": f"{BASE}/classification.config",
     }
-    with open(paths["sig_map"], "w") as f:
+    with open(maps["signature_map"], "w") as f:
         for s in range(20):
             f.write(f"{1_000_000 + s} || Known Signature {s}\n")
-    with open(paths["gen_map"], "w") as f:
+    with open(maps["generator_map"], "w") as f:
         f.write("2 || 1 || Generator Two Alert\n")
-    with open(paths["class_map"], "w") as f:
+    with open(maps["classification_map"], "w") as f:
         for i in range(1, 6):
             f.write(f"config classification: class-{i},Class {i} Description,{i}\n")
-    return {"spools": spools, "n_events": total, "gen_sec": time.time() - t0, **paths}
+    return {"global": maps, "spools": spools, "n_events": total, "gen_sec": time.time() - t0}
 
 
 def run(events_per_file: int = 25_000, n_files: int = 10) -> dict:
@@ -103,36 +94,25 @@ def run(events_per_file: int = 25_000, n_files: int = 10) -> dict:
     shutil.rmtree(db_path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     db = SnorbyDB(spark, db_path)
+    sink = star_sink(spark, fx["global"], db)
 
     batches = {"n": 0}
 
     def make_sink(crash_after: int | None):
-        def sink(batch_df, batch_id):
+        def crashing(batch_df, batch_id):
             if crash_after is not None and batches["n"] >= crash_after:
                 raise RuntimeError("injected crash")
-            sig_map, class_map = load_maps(
-                spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-            )
-            apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
+            sink(batch_df, batch_id)
             batches["n"] += 1
 
-        return sink
+        return crashing
 
     def stream(crash_after: int | None):
         # shared-parent single source: 12 files/batch over 40 files
         # total => 4 micro-batches (crash lands mid-stream) — same
         # batch volume as the pre-r13 per-source union (4 sensors x 3)
-        alerts = read_spools(
-            spark, fx["spools"], streaming=True,
-            max_files_per_trigger=3 * N_SENSORS,
-        )
-        q = (
-            alerts.writeStream.foreachBatch(make_sink(crash_after))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, fx["spools"], make_sink(crash_after), ckpt,
+              max_files_per_trigger=3 * N_SENSORS)
 
     # No-loss baseline: the event fact is one row per PARSED ROW (an
     # alert explodes to one row per packet — R10), so the expected
@@ -219,14 +199,12 @@ def sustained(events_per_file: int = 10_000, n_files: int = 24) -> dict:
     shutil.rmtree(ckpt, ignore_errors=True)
     db = SnorbyDB(spark, db_path)
 
+    sink = star_sink(spark, fx["global"], db)
     series: list[dict] = []
 
-    def sink(batch_df, batch_id):
+    def observed(batch_df, batch_id):
         t0 = time.time()
-        sig_map, class_map = load_maps(
-            spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-        )
-        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
+        sink(batch_df, batch_id)
         snap = _state_snapshot(db_path)
         snap.update(
             batch_id=int(batch_id),
@@ -242,16 +220,7 @@ def sustained(events_per_file: int = 10_000, n_files: int = 24) -> dict:
         series.append(snap)
 
     t0 = time.time()
-    alerts = read_spools(
-        spark, fx["spools"], streaming=True, max_files_per_trigger=N_SENSORS
-    )
-    q = (
-        alerts.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, fx["spools"], observed, ckpt, max_files_per_trigger=N_SENSORS)
     ingest_sec = time.time() - t0
 
     assert len(series) >= 10, f"expected a sustained run, got {len(series)} batches"

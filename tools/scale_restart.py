@@ -37,14 +37,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from charlotte_spark.cli import drain, star_sink  # noqa: E402
 from charlotte_spark.queries.charlotte_pipeline import (  # noqa: E402
     _fresh_db,
     u2_fixture,
 )
 from charlotte_spark.session import get_spark  # noqa: E402
-from charlotte_spark.sources.u2_spark import read_spools  # noqa: E402
-from charlotte_spark.streaming.maps import load_maps  # noqa: E402
-from charlotte_spark.streaming.snorby import apply_batch, enrich  # noqa: E402
 
 N_FILES_SCALES = (4, 8, 16)  # total micro-batches = 2n - 1 per point
 EVENTS_PER_FILE = 40
@@ -64,23 +62,9 @@ def _fit(xs, ys) -> float:
 
 def _stream(spark, fx, db, ckpt, sink_wrap=None):
     """One availableNow pass, one spool file per micro-batch."""
-    alerts = read_spools(
-        spark, fx["spools"], streaming=True, max_files_per_trigger=1
-    )
-
-    def sink(batch_df, batch_id):
-        sig_map, class_map = load_maps(
-            spark, fx["sig_map"], fx["gen_map"], fx["class_map"]
-        )
-        apply_batch(db, enrich(batch_df, sig_map, class_map), batch_id)
-
-    q = (
-        alerts.writeStream.foreachBatch(sink_wrap(sink) if sink_wrap else sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink = star_sink(spark, fx["global"], db)
+    drain(spark, fx["spools"], sink_wrap(sink) if sink_wrap else sink, ckpt,
+          max_files_per_trigger=1)
 
 
 def run(runs_per_point: int = 2) -> dict:
