@@ -144,15 +144,7 @@ def run_batch_pipeline(spark: SparkSession, db: SnorbyDB) -> None:
 def _star_summary(spark: SparkSession, db: SnorbyDB) -> DataFrame:
     """Deterministic projection of the star: events joined to dims plus
     per-protocol fact counts — the shape a snorby console reads."""
-    event = db.read("event", "sid int, cid bigint, signature int, timestamp timestamp")
-    sensor = db.read(
-        "sensor",
-        "sid int, hostname string, interface string, detail int, encoding int, last_cid bigint",
-    )
-    signature = db.read(
-        "signature",
-        "sig_id int, sig_sid int, sig_gid int, sig_rev int, sig_class_id int, sig_priority int, sig_name string",
-    )
+    event, sensor, signature = (db.read(t) for t in ("event", "sensor", "signature"))
     return (
         event.join(F.broadcast(sensor.select("sid", "hostname")), "sid")
         .join(
@@ -284,7 +276,7 @@ def d58_cid_sequencer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the oracle's constant and the driver hash fails — the
     invariant itself is checked, not just fold agreement."""
     db = _streamed_star(spark)
-    event = db.read("event", "sid int, cid bigint, signature int, timestamp timestamp")
+    event = db.read("event")
     out = rt_path("cid_sequencer")
     event.select("sid", "cid").write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
@@ -536,15 +528,10 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The uninterrupted reference star is INDEPENDENT of the
     # crash/resume sequence (separate db dir, same deterministic
     # fixture) — build it concurrently so it back-fills the stream
-    # starts' idle capacity (guide §2.6). It runs in a CLONED session:
-    # apply_batch pins spark.sql.shuffle.partitions per batch, which is
-    # session state — two concurrent pipelines on ONE session would
-    # race the pin/restore (and could leave the session pinned);
-    # newSession() isolates the SQLConf while sharing the context.
-    ref_spark = spark.newSession()
-    db_ref_w = _fresh_db(ref_spark, "restart_audit_ref")
+    # starts' idle capacity (guide §2.6).
+    db_ref = _fresh_db(spark, "restart_audit_ref")
     ref_pool = ThreadPoolExecutor(max_workers=1)
-    ref_fut = ref_pool.submit(run_batch_pipeline, ref_spark, db_ref_w)
+    ref_fut = ref_pool.submit(run_batch_pipeline, spark, db_ref)
 
     try:
         _crash_then_resume(spark, db, ckpt, fx)
@@ -555,9 +542,6 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reference build if it has not started, else wait for it, so
         # none of its Spark jobs outlive this query
         ref_pool.shutdown(wait=True, cancel_futures=True)
-    # re-bind the reference star's (now fully written) path to the MAIN
-    # session so the summary frames below all live in one session
-    db_ref = SnorbyDB(spark, db_ref_w.path)
 
     def star_payload(star_db) -> DataFrame:
         return _star_summary(spark, star_db).select(

@@ -30,9 +30,30 @@ _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 _CKPT_DIR_LOCK = threading.Lock()
 
 
+def arrow_table(rows, schema):
+    """``rows`` as a pyarrow table with the Arrow types Spark gives
+    ``schema`` (int→int32, bigint→int64, ...), so a parquet file written
+    from it reads back in Spark as ``schema``. ``rows`` are tuples in
+    ``schema`` order or dicts keyed by column name; ``schema`` is a DDL
+    string or a StructType."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    if rows and isinstance(rows[0], dict):
+        return pa.Table.from_pylist(rows, schema=arrow)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+
+
 def local_df(spark: SparkSession, rows, schema):
     """Small driver-local DataFrame (dims, maps, ledgers, markers),
-    built in the JVM from an Arrow table.
+    built in the JVM from an Arrow table (``arrow_table``, same
+    ``rows``/``schema`` forms).
 
     ``createDataFrame`` over Python rows, list or RDD, yields a Python
     RDD, so every scan of the frame starts a Python-worker task; the
@@ -40,19 +61,11 @@ def local_df(spark: SparkSession, rows, schema):
     that start each time. An Arrow table lands in the JVM as a local
     relation and is scanned with no Python worker (measured warm on a
     4-core host: a broadcast join of a 20-row dim fell from 0.29-0.33 s
-    to about 0.14 s). ``rows`` are tuples in ``schema`` order; ``schema``
-    is a DDL string or a StructType."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+    to about 0.14 s)."""
     from pyspark.sql.types import StructType
 
     struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    arrow = to_arrow_schema(struct)
-    cols = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, struct)
+    return spark.createDataFrame(arrow_table(rows, struct), struct)
 
 
 def reliable_checkpoint(df: DataFrame) -> DataFrame:

@@ -19,7 +19,13 @@ engine-side JDBC path — partitioned reads, batched appends, retry,
 dialect type mapping — runs for real against Derby. The retry
 semantics are additionally unit-tested with fakes in
 tests/test_streaming.py; `JdbcSnorbyDB` mirrors `SnorbyDB`'s interface
-so `apply_batch` works unchanged against a real endpoint.
+so `apply_batch` works unchanged against a real endpoint. Table names
+and schemas come from the star's one declaration
+(streaming/snorby.py ``STAR_TABLES``; ``sql_table`` maps the parquet
+tier's ``_batches`` ledger to ``meta_batches``). A small-table read
+treats only a missing table as empty — the first run; any other error
+raises after the retries, since reading a failed SELECT as an empty
+sensor table or ledger would re-number sensors or re-apply batches.
 
 At scale: each executor partition opens its own connection
 (`numPartitions` bounds the connection fan-in); dimension upserts stay
@@ -48,19 +54,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..streaming.snorby import with_retry
+from ..session import local_df
+from ..streaming.snorby import STAR_TABLES, sql_table, with_retry
+
+
+def _missing_table(e: Exception) -> bool:
+    """Missing table/view: Derby 42X05, MySQL 42S02, generic 'does not
+    exist'."""
+    return any(tok in str(e) for tok in ("42X05", "42S02", "not exist"))
 
 
 def _permanent_sql_error(e: Exception) -> bool:
-    """Errors retrying cannot fix: missing table/view (Derby 42X05,
-    MySQL 42S02, generic 'does not exist') or SQL syntax (42X01/42000).
-    Everything else (connection reset, lock timeout, node loss) stays
-    retryable."""
-    s = str(e)
-    return any(
-        tok in s
-        for tok in ("42X05", "42S02", "42X01", "does not exist", "not exist")
-    )
+    """Errors retrying cannot fix: a missing table/view or SQL syntax
+    (42X01). Everything else (connection reset, lock timeout, node
+    loss) stays retryable."""
+    return _missing_table(e) or "42X01" in str(e)
 
 
 def read_jdbc(
@@ -102,60 +110,52 @@ def write_jdbc_append(
 
 class JdbcSnorbyDB:
     """SnorbyDB-compatible facade over a real database endpoint: same
-    read/overwrite/append/applied_batches surface `apply_batch` uses,
-    so the streaming pipeline switches sinks by constructor alone."""
+    read/append/read_small/overwrite_small/applied_batches surface
+    `apply_batch` uses, so the streaming pipeline switches sinks by
+    constructor alone."""
 
     def __init__(self, spark: SparkSession, url: str, properties: dict | None = None):
         self.spark = spark
         self.url = url
         self.properties = properties or {}
 
-    @staticmethod
-    def _table(name: str) -> str:
-        """SQL identifiers can't start with '_' in most DBMSs (Derby,
-        ANSI): the parquet tier's `_batches` marker maps to `meta_batches`."""
-        return f"meta{name}" if name.startswith("_") else name
-
-    def read(self, name: str, schema: str) -> DataFrame:
-        return read_jdbc(self.spark, self.url, self._table(name), self.properties)
-
-    def overwrite(self, name: str, df: DataFrame) -> None:
-        def _w():
-            df.write.jdbc(
-                self.url, self._table(name), mode="overwrite", properties=self.properties
-            )
-
-        with_retry(_w)
+    def read(self, name: str, schema: str | None = None) -> DataFrame:
+        return read_jdbc(self.spark, self.url, sql_table(name), self.properties)
 
     def append(self, name: str, df: DataFrame) -> None:
-        write_jdbc_append(df, self.url, self._table(name), self.properties)
+        write_jdbc_append(df, self.url, sql_table(name), self.properties)
 
-    def read_small(self, name: str, schema: str) -> list[dict]:
-        """KB-sized dim as driver-side rows; over JDBC this is one
-        bounded SELECT (the reference's cache-fill reads, :543-552)."""
+    def read_small(self, name: str, schema: str | None = None) -> list[dict]:
+        """KB-sized table as driver-side rows: one bounded SELECT (the
+        reference's cache-fill reads, :543-552), retried as a whole.
+        Only a missing table reads as empty."""
+
+        def rows() -> list[dict]:
+            df = self.spark.read.jdbc(self.url, sql_table(name), properties=self.properties)
+            return [r.asDict() for r in df.collect()]
+
         try:
-            return [r.asDict() for r in self.read(name, schema).collect()]
-        except Exception:  # table absent on first run
-            return []
+            return with_retry(rows, fatal=_permanent_sql_error)
+        except Exception as e:  # noqa: BLE001 — classified below
+            if _missing_table(e):  # first run
+                return []
+            raise
 
-    def overwrite_small(self, name: str, rows: list[dict], schema: str) -> None:
-        from ..session import local_df
-
-        cols = [p.strip().split()[0] for p in schema.split(",")]
-        self.overwrite(
-            name, local_df(self.spark, [tuple(r[c] for c in cols) for r in rows], schema)
+    def overwrite_small(self, name: str, rows: list[dict], schema: str | None = None) -> None:
+        df = local_df(self.spark, rows, schema or STAR_TABLES[name][0])
+        with_retry(
+            lambda: df.write.jdbc(
+                self.url, sql_table(name), mode="overwrite", properties=self.properties
+            )
         )
 
     def applied_batches(self) -> set[int]:
-        try:
-            return {r.batch_id for r in self.read("_batches", "batch_id long").collect()}
-        except Exception:  # table absent on first run
-            return set()
+        return {r["batch_id"] for r in self.read_small("_batches")}
 
     def mark_applied(self, batch_id: int) -> None:
-        from ..session import local_df
-
-        self.append("_batches", local_df(self.spark, [(batch_id,)], "batch_id long"))
+        self.append(
+            "_batches", local_df(self.spark, [(batch_id,)], STAR_TABLES["_batches"][0])
+        )
 
     def create_schema(self, run_sql, dialect: str = "mysql") -> None:
         """Provision the star on the endpoint: executes the dialect's

@@ -13,8 +13,13 @@ golden-tested against known ``INET_ATON`` vectors — so on MySQL the
 bound bigint parameter equals what the reference's ``inet_aton(%s)``
 would have produced, and the SQL itself stays dialect-free.
 
+The tables, their columns and natural keys are not declared here: they
+come from the star's one declaration, ``streaming/snorby.py``
+``STAR_TABLES``, under their SQL names (``sql_table``: the ``_batches``
+ledger is ``meta_batches``). This module only renders them.
+
 Dialect facts encoded here:
-- identifier quoting: backticks (MySQL), double quotes (ANSI/Derby);
+- identifier quoting: backticks (MySQL), unquoted (Derby, see `quote`);
 - type mapping: Spark int/bigint/string/timestamp/binary/double →
   INT/BIGINT/TEXT/DATETIME/BLOB/DOUBLE (the star needs no decimals);
 - replay protection: natural keys become PRIMARY KEY in DDL, and the
@@ -26,55 +31,12 @@ Dialect facts encoded here:
 
 from __future__ import annotations
 
-# Natural-key layout of the snorby star as the engine writes it
-# (streaming/snorby.py `facts`/dim upserts). Schema strings are the
-# same Spark DDL fragments SnorbyDB.read uses.
+from ..streaming.snorby import STAR_TABLES as _STAR, sql_table
+
+# The snorby star's declaration (streaming/snorby.py STAR_TABLES: Spark
+# DDL, natural key) under the tables' SQL names.
 STAR_TABLES: dict[str, tuple[str, tuple[str, ...]]] = {
-    "sensor": (
-        "sid int, hostname string, interface string, detail int, "
-        "encoding int, last_cid bigint",
-        ("sid",),
-    ),
-    "signature": (
-        "sig_id int, sig_sid int, sig_gid int, sig_rev int, "
-        "sig_class_id int, sig_priority int, sig_name string",
-        ("sig_id",),
-    ),
-    "sig_class": (
-        "sig_class_id int, sig_class_name string",
-        ("sig_class_id",),
-    ),
-    "event": (
-        "sid int, cid bigint, signature int, timestamp timestamp",
-        ("sid", "cid"),
-    ),
-    "iphdr": (
-        "sid int, cid bigint, ip_src bigint, ip_dst bigint, ip_ver int, "
-        "ip_hlen int, ip_tos int, ip_len int, ip_id int, ip_flags int, "
-        "ip_off int, ip_ttl int, ip_proto int, ip_csum int",
-        ("sid", "cid"),
-    ),
-    "tcphdr": (
-        "sid int, cid bigint, tcp_sport int, tcp_dport int, tcp_seq bigint, "
-        "tcp_ack bigint, tcp_off int, tcp_res int, tcp_flags int, "
-        "tcp_win int, tcp_csum int, tcp_urp int",
-        ("sid", "cid"),
-    ),
-    "udphdr": (
-        "sid int, cid bigint, udp_sport int, udp_dport int, udp_len int, "
-        "udp_csum int",
-        ("sid", "cid"),
-    ),
-    "icmphdr": (
-        "sid int, cid bigint, icmp_type int, icmp_code int, icmp_csum int, "
-        "icmp_id int, icmp_seq int",
-        ("sid", "cid"),
-    ),
-    "data": (
-        "sid int, cid bigint, data_payload string",
-        ("sid", "cid"),
-    ),
-    "meta_batches": ("batch_id bigint", ("batch_id",)),
+    sql_table(name): spec for name, spec in _STAR.items()
 }
 
 _TYPE_MAP = {

@@ -22,16 +22,19 @@ processed set-wise:
   batches are skipped (the exactly-once story for sinks without
   checkpoint-coordinated transactions, SURVEY §7 hard #1).
 
-The "database" is a directory of parquet tables (the container has no
-MySQL); ``jdbc_url`` switches the same writes to ``df.write.jdbc``
-wrapped in the R21 retry helper. Single-writer is assumed, like the
-reference (SURVEY §7 hard #2).
+The star's tables are declared once, in ``STAR_TABLES``; the writes
+here, the readers, ``sinks/jdbc.py`` and the MySQL DDL of
+``sinks/mysql_dialect.py`` all derive from it. The "database" is a
+directory of parquet tables (the container has no MySQL); whole-file
+writes of the small tables are atomic. ``sinks/jdbc.JdbcSnorbyDB``
+sends the same writes through ``df.write.jdbc`` wrapped in the R21
+retry helper. Single-writer is assumed, like the reference (SURVEY §7
+hard #2).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -41,33 +44,88 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.net import ip_str_to_long
-from ..session import join_futures, local_df
+from ..session import arrow_table, join_futures, local_df
 
-FACT_TABLES = ("event", "iphdr", "tcphdr", "udphdr", "icmphdr", "data")
+# The snorby star as this engine writes it (charlotte/__init__.py:463-611):
+# table -> (Spark DDL in column order, natural key). The sink's writes,
+# SnorbyDB/JdbcSnorbyDB reads and the MySQL DDL (sinks/mysql_dialect.py)
+# all derive from this one declaration. ``_batches`` is the
+# applied-batch ledger.
+STAR_TABLES: dict[str, tuple[str, tuple[str, ...]]] = {
+    "sensor": (
+        "sid int, hostname string, interface string, detail int, "
+        "encoding int, last_cid bigint",
+        ("sid",),
+    ),
+    "signature": (
+        "sig_id int, sig_sid int, sig_gid int, sig_rev int, "
+        "sig_class_id int, sig_priority int, sig_name string",
+        ("sig_id",),
+    ),
+    "sig_class": (
+        "sig_class_id int, sig_class_name string",
+        ("sig_class_id",),
+    ),
+    "event": (
+        "sid int, cid bigint, signature int, timestamp timestamp",
+        ("sid", "cid"),
+    ),
+    "iphdr": (
+        "sid int, cid bigint, ip_src bigint, ip_dst bigint, ip_ver int, "
+        "ip_hlen int, ip_tos int, ip_len int, ip_id int, ip_flags int, "
+        "ip_off int, ip_ttl int, ip_proto int, ip_csum int",
+        ("sid", "cid"),
+    ),
+    "tcphdr": (
+        "sid int, cid bigint, tcp_sport int, tcp_dport int, tcp_seq bigint, "
+        "tcp_ack bigint, tcp_off int, tcp_res int, tcp_flags int, "
+        "tcp_win int, tcp_csum int, tcp_urp int",
+        ("sid", "cid"),
+    ),
+    "udphdr": (
+        "sid int, cid bigint, udp_sport int, udp_dport int, udp_len int, "
+        "udp_csum int",
+        ("sid", "cid"),
+    ),
+    "icmphdr": (
+        "sid int, cid bigint, icmp_type int, icmp_code int, icmp_csum int, "
+        "icmp_id int, icmp_seq int",
+        ("sid", "cid"),
+    ),
+    "data": (
+        "sid int, cid bigint, data_payload string",
+        ("sid", "cid"),
+    ),
+    "_batches": ("batch_id bigint", ("batch_id",)),
+}
+
+# fact table -> the alert column whose presence gives an alert a row in
+# it (every alert has an event row)
+_FACT_PRESENCE = {
+    "event": None,
+    "iphdr": "ip_ver",
+    "tcphdr": "tcp_sport",
+    "udphdr": "udp_sport",
+    "icmphdr": "icmp_type",
+    "data": "payload",
+}
+FACT_TABLES = tuple(_FACT_PRESENCE)
 DIM_TABLES = ("sensor", "signature", "sig_class")
 
-SENSOR_SCHEMA = (
-    "sid int, hostname string, interface string, detail int, encoding int, last_cid bigint"
-)
-SIGNATURE_SCHEMA = (
-    "sig_id int, sig_sid int, sig_gid int, sig_rev int, sig_class_id int, "
-    "sig_priority int, sig_name string"
-)
-SIG_CLASS_SCHEMA = "sig_class_id int, sig_class_name string"
-
-_PA_TYPES = {"int": "int32", "bigint": "int64", "long": "int64", "string": "string"}
+SENSOR_SCHEMA = STAR_TABLES["sensor"][0]
+SIGNATURE_SCHEMA = STAR_TABLES["signature"][0]
 
 
-def _pa_schema(schema: str):
-    """'sid int, hostname string' → pyarrow schema matching what Spark
-    writes for the same DDL string (int→int32, bigint→int64)."""
-    import pyarrow as pa
+def star_columns(name: str) -> list[str]:
+    """Declared column names of star table ``name``, in order."""
+    return [part.split()[0] for part in STAR_TABLES[name][0].split(",")]
 
-    fields = []
-    for part in schema.split(","):
-        name, typ = part.strip().split()
-        fields.append(pa.field(name, getattr(pa, _PA_TYPES[typ.lower()])(), nullable=True))
-    return pa.schema(fields)
+
+def sql_table(name: str) -> str:
+    """Star table ``name`` as named in a SQL database: identifiers can't
+    start with '_' in most DBMSs (Derby, ANSI), so the parquet tier's
+    ``_batches`` ledger is ``meta_batches`` there."""
+    return f"meta{name}" if name.startswith("_") else name
 
 
 def with_retry(fn, max_tries: int = 8, base_sleep: float = 1.0, fatal=None):
@@ -99,6 +157,7 @@ class SnorbyDB:
     an in-process cache, valid under the documented single-writer
     assumption — while fact tables go through distributed Spark writes
     (`append`). At 100 TB the facts are the 100 TB; the dims stay KBs.
+    A ``schema`` left out is the table's declared one (`STAR_TABLES`).
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -111,17 +170,19 @@ class SnorbyDB:
     def _tdir(self, name: str) -> str:
         return f"{self.path}/{name}"
 
-    def read(self, name: str, schema: str) -> DataFrame:
+    def read(self, name: str, schema: str | None = None) -> DataFrame:
+        """Every declared column of table ``name``; an absent table is
+        an empty frame of ``schema``."""
         if os.path.exists(self._tdir(name)):
-            return self.spark.read.parquet(self._tdir(name))
-        return local_df(self.spark, [], schema)
+            return self.spark.read.schema(STAR_TABLES[name][0]).parquet(self._tdir(name))
+        return local_df(self.spark, [], schema or STAR_TABLES[name][0])
 
     def append(self, name: str, df: DataFrame) -> None:
         with_retry(lambda: df.write.mode("append").parquet(self._tdir(name)))
 
     # -- small-table tier (driver-side, cached; single writer) --------
 
-    def read_small(self, name: str, schema: str) -> list[dict]:
+    def read_small(self, name: str, schema: str | None = None) -> list[dict]:
         """Rows of a KB-sized table as dicts; parquet read-through once
         per process, then served from the cache this writer maintains."""
         if name not in self._small:
@@ -134,43 +195,41 @@ class SnorbyDB:
                 self._small[name] = []
         return self._small[name]
 
-    def overwrite_small(self, name: str, rows: list[dict], schema: str) -> None:
-        """Atomic driver-side overwrite: write one parquet part into a
-        temp dir, rename it over the table dir (no Spark job — these
-        tables are KBs)."""
-        import pyarrow as pa
+    def _publish(self, name: str, part: str, rows: list[dict], schema: str) -> None:
+        """Write ``rows`` as the parquet file ``part`` of table ``name``
+        (no Spark job — these tables are KBs). The file is written under
+        a ``_``-prefixed name without the ``.parquet`` suffix, which
+        Spark and pyarrow readers skip, then renamed into place: a crash
+        at any point leaves the old file or the new one, never a torn
+        file or a missing table."""
         import pyarrow.parquet as pq
 
-        pa_schema = _pa_schema(schema)
-        table = pa.Table.from_pylist(rows, schema=pa_schema)
-        tmp = self._tdir(f"_{name}_tmp")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.makedirs(tmp)
-        with_retry(lambda: pq.write_table(table, f"{tmp}/part-00000.parquet"))
-        final = self._tdir(name)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        d = self._tdir(name)
+        os.makedirs(d, exist_ok=True)
+        tmp = f"{d}/_{part}.tmp"
+        table = arrow_table(rows, schema)
+        with_retry(lambda: pq.write_table(table, tmp))
+        os.replace(tmp, f"{d}/{part}")
+
+    def overwrite_small(self, name: str, rows: list[dict], schema: str | None = None) -> None:
+        """Atomic driver-side overwrite: the table is one parquet part."""
+        self._publish(name, "part-00000.parquet", rows, schema or STAR_TABLES[name][0])
         self._small[name] = rows
 
     def applied_batches(self) -> set[int]:
         if self._applied is None:
-            self._applied = {r["batch_id"] for r in self.read_small("_batches", "batch_id long")}
+            self._applied = {r["batch_id"] for r in self.read_small("_batches")}
         return self._applied
 
     def mark_applied(self, batch_id: int) -> None:
         """Append-only commit marker; one tiny parquet part per batch
         (unique name — concurrent-safe against nothing, single writer)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        d = self._tdir("_batches")
-        os.makedirs(d, exist_ok=True)
-        table = pa.Table.from_pylist(
-            [{"batch_id": batch_id}], schema=_pa_schema("batch_id long")
+        self._publish(
+            "_batches",
+            f"part-{batch_id:08d}-{os.getpid()}.parquet",
+            [{"batch_id": batch_id}],
+            STAR_TABLES["_batches"][0],
         )
-        with_retry(lambda: pq.write_table(table, f"{d}/part-{batch_id:08d}-{os.getpid()}.parquet"))
         self.applied_batches().add(batch_id)
         self._small.pop("_batches", None)
 
@@ -247,11 +306,11 @@ def _upsert_sensor(db: SnorbyDB, batch_names: set[str]) -> DataFrame:
             for i, h in enumerate(new_names)
         ]
         db.overwrite_small("sensor", dim, SENSOR_SCHEMA)
-    cols = ("sid", "hostname", "interface", "detail", "encoding", "last_cid")
-    return local_df(db.spark, [tuple(r[c] for c in cols) for r in dim], SENSOR_SCHEMA)
+    return local_df(db.spark, dim, SENSOR_SCHEMA)
 
 
-_SIG_NATURAL = ("sig_sid", "sig_gid", "sig_rev", "sig_class_id", "sig_priority", "sig_name")
+# the signature dim's natural key: every column but the dense sig_id
+_SIG_NATURAL = tuple(star_columns("signature")[1:])
 
 
 def _upsert_signature(db: SnorbyDB, naturals: set[tuple]) -> DataFrame:
@@ -272,18 +331,15 @@ def _upsert_signature(db: SnorbyDB, naturals: set[tuple]) -> DataFrame:
             for i, t in enumerate(new)
         ]
         db.overwrite_small("signature", dim, SIGNATURE_SCHEMA)
-    return local_df(
-        db.spark,
-        [tuple(r[k] for k in ("sig_id", *_SIG_NATURAL)) for r in dim],
-        SIGNATURE_SCHEMA,
-    )
+    return local_df(db.spark, dim, SIGNATURE_SCHEMA)
 
 
-def _upsert_sig_class(db: SnorbyDB, current: dict[int, str]) -> DataFrame:
+def _upsert_sig_class(db: SnorbyDB, current: dict[int, str]) -> None:
     """R18: insert-if-absent on classid; UPDATE name if it drifted
     (charlotte/__init__.py:606-608 — SCD-1 overwrite). ``current`` is
     the batch's pre-collected classid -> name map."""
-    dim = db.read_small("sig_class", SIG_CLASS_SCHEMA)
+    schema = STAR_TABLES["sig_class"][0]
+    dim = db.read_small("sig_class", schema)
     current = dict(current)  # consumed destructively below
     merged = [
         {
@@ -297,12 +353,7 @@ def _upsert_sig_class(db: SnorbyDB, current: dict[int, str]) -> DataFrame:
         for cid, name in sorted(current.items())
     ]
     if merged != dim:
-        db.overwrite_small("sig_class", merged, SIG_CLASS_SCHEMA)
-    return local_df(
-        db.spark,
-        [(r["sig_class_id"], r["sig_class_name"]) for r in merged],
-        SIG_CLASS_SCHEMA,
-    )
+        db.overwrite_small("sig_class", merged, schema)
 
 
 def apply_batch(
@@ -313,23 +364,7 @@ def apply_batch(
     """D60/foreachBatch body: upsert dims, sequence cids, append facts."""
     if batch_id in db.applied_batches():
         return  # idempotent replay after restart
-
-    # The jobs in this body all operate on one micro-batch; in a session
-    # tuned for analytic scans (e.g. 200 shuffle partitions) every tiny
-    # job would spawn hundreds of near-empty tasks, and every fact
-    # append would commit that many output files. Size the pin to the
-    # batch's own input split count (scale-adaptive: a 1-spool-file
-    # micro-batch shuffles into 4 partitions, a 100 TB batch with
-    # thousands of splits keeps the session's configured width).
-    spark = enriched.sparkSession
-    batch_splits = enriched.rdd.getNumPartitions()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    pin = min(int(prev_parts), max(2 * batch_splits, 4))
-    spark.conf.set("spark.sql.shuffle.partitions", str(pin))
-    try:
-        _apply_batch_body(db, enriched, batch_id)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _apply_batch_body(db, enriched, batch_id)
 
 
 def _apply_batch_body(
@@ -342,35 +377,46 @@ def _apply_batch_body(
     # its lineage is one micro-batch deep and the source is replayable,
     # so cached blocks + retained lineage are already fault-tolerant —
     # a checkpoint write per batch would be pure overhead (measured ~15%
-    # of ingest throughput). Unpersisted at the end of the batch.
+    # of ingest throughput). Unpersisted on every exit from the batch.
     enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # ONE grouped collect feeds the emptiness check, all three dim
-    # upserts AND the per-sensor last_cid watermark (r15 collapsed an
-    # isEmpty job plus one distinct+collect per dim into one distinct;
-    # r16 turns the distinct into the equivalent groupBy + count so the
-    # batch's per-sensor row counts ride the same job — cid is a dense
-    # row_number per sensor, so max assigned cid == last_cid + n_rows,
-    # and the separate distributed max(cid) aggregate per batch is
-    # deleted; guide §1.2 remove work). The combined tuple's
-    # cardinality is bounded by the batch's distinct (sensor,
-    # signature, class) combinations — dim-sized, not batch-sized, and
-    # the partial-agg shuffle dedups/counts map-side.
-    combos = (
-        enriched.groupBy(
-            "sensor_name", "signature_id", "generator_id", "sig_rev",
-            "sig_classid", "sig_priority", "sig_msg",
-            "classification_id", "class_name",
+    a = None
+    try:
+        # ONE grouped collect feeds the emptiness check, all three dim
+        # upserts AND the per-sensor last_cid watermark (r15 collapsed
+        # an isEmpty job plus one distinct+collect per dim into one
+        # distinct; r16 turns the distinct into the equivalent groupBy
+        # + count so the batch's per-sensor row counts ride the same
+        # job — cid is a dense row_number per sensor, so max assigned
+        # cid == last_cid + n_rows, and the separate distributed
+        # max(cid) aggregate per batch is deleted; guide §1.2 remove
+        # work). The combined tuple's cardinality is bounded by the
+        # batch's distinct (sensor, signature, class) combinations —
+        # dim-sized, not batch-sized, and the partial-agg shuffle
+        # dedups/counts map-side.
+        combos = (
+            enriched.groupBy(
+                "sensor_name", "signature_id", "generator_id", "sig_rev",
+                "sig_classid", "sig_priority", "sig_msg",
+                "classification_id", "class_name",
+            )
+            .agg(F.count(F.lit(1)).alias("n_rows"))
+            .collect()
         )
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .collect()
-    )
-    if not combos:
+        if combos:
+            a = _sequenced(db, enriched, combos).persist(StorageLevel.MEMORY_AND_DISK)
+            _append_facts(db, a)
+            _advance_last_cid(db, combos)
+    finally:
+        if a is not None:
+            a.unpersist()
         enriched.unpersist()
-        db.mark_applied(batch_id)
-        return
+    db.mark_applied(batch_id)
 
-    # dim upserts are now pure driver work (KB-sized merges + pyarrow
+
+def _sequenced(db: SnorbyDB, enriched: DataFrame, combos: list) -> DataFrame:
+    """Upsert the dims from the batch's combos, then attach sid and
+    sig_id and the per-sensor dense cid to every alert."""
+    # dim upserts are pure driver work (KB-sized merges + pyarrow
     # writes) over the shared collect — no per-dim Spark jobs to overlap
     sensor = _upsert_sensor(db, {r.sensor_name for r in combos})
     signature = _upsert_signature(
@@ -385,7 +431,6 @@ def _apply_batch_body(
     )
     _upsert_sig_class(db, {r.classification_id: r.class_name for r in combos})
 
-    # attach sid + sig_id
     a = enriched.join(
         F.broadcast(sensor.select(F.col("hostname").alias("sensor_name"), "sid", "last_cid")),
         "sensor_name",
@@ -410,60 +455,45 @@ def _apply_batch_body(
         F.col("event_id").asc(),
         F.col("packet_pos").asc_nulls_first(),
     )
-    a = a.withColumn("cid", F.row_number().over(w) + F.col("last_cid")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    return a.withColumn("cid", F.row_number().over(w) + F.col("last_cid"))
+
+
+def _append_facts(db: SnorbyDB, a: DataFrame) -> None:
+    """Append each fact table's declared columns: the derived ones are
+    computed on ``a`` once, each fact keeps the alerts its presence
+    column marks (`_FACT_PRESENCE`)."""
+    a = a.withColumns(
+        {
+            "signature": F.col("sig_id"),
+            # R11 timestamp normalize — epoch seconds -> UTC wall-clock
+            "timestamp": F.from_unixtime("event_second").cast("timestamp"),
+            "ip_src": ip_str_to_long(F.col("ip_src")),
+            "ip_dst": ip_str_to_long(F.col("ip_dst")),
+            "tcp_res": F.lit(0),
+            # R12: lowercase hex payload (Spark hex() is uppercase)
+            "data_payload": F.lower(F.hex("payload")),
+        }
     )
-
-    # R11 timestamp normalize — epoch seconds -> UTC wall-clock string
-    ts = F.from_unixtime("event_second").cast("timestamp")
-
     facts = {
-        "event": a.select(
-            "sid", "cid", F.col("sig_id").alias("signature"), ts.alias("timestamp")
-        ),
-        "iphdr": a.filter(F.col("ip_ver").isNotNull()).select(
-            "sid",
-            "cid",
-            ip_str_to_long(F.col("ip_src")).alias("ip_src"),
-            ip_str_to_long(F.col("ip_dst")).alias("ip_dst"),
-            "ip_ver",
-            "ip_hlen",
-            "ip_tos",
-            "ip_len",
-            "ip_id",
-            "ip_flags",
-            "ip_off",
-            "ip_ttl",
-            "ip_proto",
-            "ip_csum",
-        ),
-        "tcphdr": a.filter(F.col("tcp_sport").isNotNull()).select(
-            "sid", "cid", "tcp_sport", "tcp_dport", "tcp_seq", "tcp_ack", "tcp_off",
-            F.lit(0).alias("tcp_res"), "tcp_flags", "tcp_win", "tcp_csum", "tcp_urp",
-        ),
-        "udphdr": a.filter(F.col("udp_sport").isNotNull()).select(
-            "sid", "cid", "udp_sport", "udp_dport", "udp_len", "udp_csum"
-        ),
-        "icmphdr": a.filter(F.col("icmp_type").isNotNull()).select(
-            "sid", "cid", "icmp_type", "icmp_code", "icmp_csum", "icmp_id", "icmp_seq"
-        ),
-        # R12: lowercase hex payload (Spark hex() is uppercase)
-        "data": a.filter(F.col("payload").isNotNull()).select(
-            "sid", "cid", F.lower(F.hex("payload")).alias("data_payload")
-        ),
+        name: (a if present is None else a.filter(F.col(present).isNotNull())).select(
+            *star_columns(name)
+        )
+        for name, present in _FACT_PRESENCE.items()
     }
-    # the six fact appends read only the checkpointed `a` and write
+    # the six fact appends read only the persisted `a` and write
     # disjoint tables — run them as concurrent Spark jobs; the
     # applied-batch marker comes strictly last (it is the idempotence
     # commit point)
     with ThreadPoolExecutor(max_workers=len(facts)) as pool:
         join_futures([pool.submit(db.append, name, df) for name, df in facts.items()])
 
-    # R19 persist: sensor.last_cid = max assigned cid (:566-569).
-    # cid is row_number + the sensor's pre-batch last_cid, so the max
-    # equals last_cid + the sensor's batch row count — already summed
-    # map-side into the shared combos collect; pure driver work, the
-    # r15 shape's per-batch distributed max(cid) job is gone.
+
+def _advance_last_cid(db: SnorbyDB, combos: list) -> None:
+    """R19 persist: sensor.last_cid = max assigned cid (:566-569).
+    cid is row_number + the sensor's pre-batch last_cid, so the max
+    equals last_cid + the sensor's batch row count — already summed
+    map-side into the shared combos collect; pure driver work, the r15
+    shape's per-batch distributed max(cid) job is gone."""
     n_per_sensor: dict[str, int] = {}
     for r in combos:
         n_per_sensor[r.sensor_name] = n_per_sensor.get(r.sensor_name, 0) + r.n_rows
@@ -472,6 +502,3 @@ def _apply_batch_body(
         for s in db.read_small("sensor", SENSOR_SCHEMA)
     ]
     db.overwrite_small("sensor", dim, SENSOR_SCHEMA)
-    a.unpersist()
-    enriched.unpersist()
-    db.mark_applied(batch_id)

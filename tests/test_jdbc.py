@@ -54,3 +54,45 @@ def test_jdbc_snorby_pipeline_matches_parquet_star(spark):
     n_ip = jdb.read("iphdr", "sid int").count()
     assert n_ip > 0
     assert jdb.applied_batches() == {0}
+
+
+class _FakeJdbcRead:
+    """Stands in for both ``spark.read`` and the frame its ``jdbc`` call
+    returns: each ``collect`` takes the next outcome, raising it if it
+    is an exception."""
+
+    def __init__(self, outcomes):
+        self.outcomes = list(outcomes)
+
+    def jdbc(self, url, table, **kwargs):
+        return self
+
+    def collect(self):
+        out = self.outcomes.pop(0)
+        if isinstance(out, Exception):
+            raise out
+        return out
+
+
+def _fake_jdbc_db(*outcomes) -> JdbcSnorbyDB:
+    class _FakeSpark:
+        read = _FakeJdbcRead(outcomes)
+
+    return JdbcSnorbyDB(_FakeSpark(), "jdbc:fake", {})
+
+
+def test_jdbc_small_reads_treat_only_a_missing_table_as_empty():
+    """A failed SELECT read as an empty ledger re-applies every batch,
+    and as an empty sensor table re-numbers the sensors: only a missing
+    table (the first run) may read as empty."""
+    from pyspark.sql import Row
+
+    # a transient failure of the collect itself is retried
+    db = _fake_jdbc_db(RuntimeError("Connection reset"), [Row(batch_id=3)])
+    assert db.applied_batches() == {3}
+    # an error retrying cannot fix, other than a missing table, raises
+    db = _fake_jdbc_db(RuntimeError("ERROR 42X01: Syntax error"))
+    with pytest.raises(RuntimeError, match="42X01"):
+        db.read_small("sensor")
+    db = _fake_jdbc_db(RuntimeError("Table/View 'SENSOR' does not exist."))
+    assert db.read_small("sensor") == []

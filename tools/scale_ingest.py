@@ -34,7 +34,7 @@ from charlotte_spark.operators.loopstate import scratch_dir  # noqa: E402
 from charlotte_spark.session import get_spark  # noqa: E402
 from charlotte_spark.sources.u2_spark import read_spools  # noqa: E402
 from charlotte_spark.sources.unified2 import write_spool  # noqa: E402
-from charlotte_spark.streaming.snorby import SENSOR_SCHEMA, SnorbyDB  # noqa: E402
+from charlotte_spark.streaming.snorby import SnorbyDB  # noqa: E402
 
 BASE = scratch_dir("scale")
 N_SENSORS = 4
@@ -130,7 +130,7 @@ def run(events_per_file: int = 25_000, n_files: int = 10) -> dict:
     stream(crash_after=None)  # restart: same checkpoint + db
     ingest_sec = time.time() - t0
 
-    event = db.read("event", "sid int, cid bigint, signature int, timestamp timestamp")
+    event = db.read("event")
     audit = (
         event.groupBy("sid")
         .agg(
@@ -209,7 +209,7 @@ def sustained(events_per_file: int = 10_000, n_files: int = 24) -> dict:
         snap.update(
             batch_id=int(batch_id),
             batch_sec=round(time.time() - t0, 3),
-            state_rows=len(db.read_small("sensor", SENSOR_SCHEMA)),
+            state_rows=len(db.read_small("sensor")),
             # Checkpoint growth alongside state bytes (VERDICT r13 #7):
             # offsets/commits logs are one small file per batch —
             # O(batches) by design, KB-scale, and compacted by Spark;
@@ -243,7 +243,7 @@ def sustained(events_per_file: int = 10_000, n_files: int = 24) -> dict:
     late = sorted(lat[-5:])[2]
     assert late <= 2.0 * early, f"per-batch latency trend: {early} -> {late}"
 
-    event = db.read("event", "sid int, cid bigint, signature int, timestamp timestamp")
+    event = db.read("event")
     audit = (
         event.groupBy("sid")
         .agg(
