@@ -26,15 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("content_length", T.LongType()),
-        T.StructField("content_md5", T.StringType()),
-        T.StructField("uri", T.StringType()),  # optional: external asset
-    ]
-)
-
 DECODED_IMAGE = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

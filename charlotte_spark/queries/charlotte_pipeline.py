@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -139,6 +140,84 @@ def run_batch_pipeline(spark: SparkSession, db: SnorbyDB) -> None:
     """Whole-input batch run: the stream's foreachBatch body called once."""
     fx = u2_fixture()
     star_sink(spark, fx["global"], db)(read_spools(spark, fx["spools"]), 0)
+
+
+def crash_and_resume(
+    spark: SparkSession,
+    db: SnorbyDB,
+    ckpt: str,
+    fx: dict,
+    crash_batch: int | None = None,
+    after: bool = False,
+    cap: int = 1,
+    resume_cap: int | None = None,
+) -> tuple[float, float]:
+    """The crash-and-resume drill: drain ``fx``'s spools through
+    `star_sink` into ``db`` under the fresh checkpoint ``ckpt``, ``cap``
+    files per trigger, until an injected crash kills the stream; then
+    resume from the same checkpoint as a restarted process would, with
+    a new ``SnorbyDB`` over ``db.path`` (no dim or ledger cache) and
+    ``resume_cap`` (default ``cap``) files per trigger.
+
+    The drill raises the crash right before the body of batch
+    ``crash_batch``, or right after it with ``after``; with
+    ``crash_batch`` None, ``db`` itself must raise it (a ``SnorbyDB``
+    whose writes fail mid-batch). Either way its message contains
+    "injected crash". Returns the wall seconds of the crashed run and
+    of the resume."""
+    sink = star_sink(spark, fx["global"], db)
+
+    def crashing(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id == crash_batch and not after:
+            raise RuntimeError(f"injected crash before batch {batch_id}")
+        sink(batch_df, batch_id)
+        if batch_id == crash_batch and after:
+            # the batch is in the star and the ledger, but the stream dies
+            # before the checkpoint's commit log records it
+            raise RuntimeError(f"injected crash after batch {batch_id}")
+
+    crashed = False
+    t0 = time.perf_counter()
+    try:
+        drain(spark, fx["spools"], crashing, ckpt, max_files_per_trigger=cap)
+    except Exception as e:  # StreamingQueryException wrapping the injection
+        if "injected crash" not in str(e):
+            raise
+        crashed = True
+    crash_s = time.perf_counter() - t0
+    # Raised OUTSIDE the try so the except above can never swallow it: a
+    # crash that does not fire must fail loudly, not degrade the audit to
+    # comparing two uninterrupted runs.
+    if not crashed:
+        raise AssertionError("injected crash did not fire")
+
+    t0 = time.perf_counter()
+    resumed = star_sink(spark, fx["global"], SnorbyDB(spark, db.path))
+    drain(spark, fx["spools"], resumed, ckpt, max_files_per_trigger=resume_cap or cap)
+    return crash_s, time.perf_counter() - t0
+
+
+def cid_density(event: DataFrame) -> DataFrame:
+    """D58 audit of a star's ``event`` cids: per sensor ``sid``, the row
+    count ``n`` and ``dense`` = 1 when its cids are exactly 1..n (no gap,
+    no duplicate), else 0."""
+    return (
+        event.groupBy("sid")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("cid").alias("n_distinct"),
+            F.min("cid").alias("min_cid"),
+            F.max("cid").alias("max_cid"),
+        )
+        .select(
+            "sid",
+            "n",
+            ((F.col("n") == F.col("n_distinct"))
+             & (F.col("min_cid") == 1)
+             & (F.col("max_cid") == F.col("n"))).cast("int").alias("dense"),
+        )
+        .orderBy("sid")
+    )
 
 
 def _star_summary(spark: SparkSession, db: SnorbyDB) -> DataFrame:
@@ -279,24 +358,7 @@ def d58_cid_sequencer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     event = db.read("event")
     out = rt_path("cid_sequencer")
     event.select("sid", "cid").write.mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    return (
-        back.groupBy("sid")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("cid").alias("n_distinct"),
-            F.min("cid").alias("min_cid"),
-            F.max("cid").alias("max_cid"),
-        )
-        .select(
-            "sid",
-            "n",
-            ((F.col("n") == F.col("n_distinct"))
-             & (F.col("min_cid") == 1)
-             & (F.col("max_cid") == F.col("n"))).cast("int").alias("dense"),
-        )
-        .orderBy("sid")
-    )
+    return cid_density(spark.read.parquet(out))
 
 
 @query(
@@ -352,8 +414,6 @@ def r_charlotte_rollover_hook(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver hash pins (3, complete=1) — i.e. the listener must actually
     observe every rollover, which no SQL can verify independently. A
     listener that drops progress events fails the hash."""
-    import time
-
     from ..sources.u2_spark import RolloverListener
 
     fx = u2_fixture()
@@ -450,40 +510,6 @@ def d60_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rt_digest(rows, "foreachbatch_upsert", "table_name")
 
 
-def _crash_then_resume(spark: SparkSession, db: SnorbyDB, ckpt: str, fx: dict) -> None:
-    """d182's drill: a one-file-per-batch stream whose sink crashes
-    right after applying batch 1, then a resume from the same
-    checkpoint and star."""
-    sink = star_sink(spark, fx["global"], db)
-    applied = {"n": 0}
-
-    def crashing_sink(batch_df: DataFrame, batch_id: int) -> None:
-        sink(batch_df, batch_id)
-        applied["n"] += 1
-        if applied["n"] == 2:
-            # AFTER apply: the batch is in the star + ledger, but the
-            # stream dies before the checkpoint commit log records it
-            raise RuntimeError("injected crash after commit")
-
-    crashed = False
-    try:
-        drain(spark, fx["spools"], crashing_sink, ckpt, max_files_per_trigger=1)
-    except Exception as e:  # StreamingQueryException wrapping the injection
-        if "injected crash" not in str(e):
-            raise
-        crashed = True
-    if not crashed:
-        # Raised OUTSIDE the try so the except above can never swallow it
-        # (its message would otherwise match the handler's substring): a
-        # non-firing injection must fail loudly, not degrade the audit to
-        # comparing two uninterrupted runs.
-        raise AssertionError("injected crash did not fire")
-
-    # resume from the same checkpoint + db: batch 1 re-delivers, the
-    # ledger skips it, the remaining spool files apply once each
-    drain(spark, fx["spools"], sink, ckpt, max_files_per_trigger=3)
-
-
 @query(
     "d182_restart_exactly_once",
     tags=("D182", "R2", "R18", "R21", "D60"),
@@ -516,9 +542,11 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_rows/digest.
 
     At scale this is the recovery drill every exactly-once claim needs:
-    kill -9 between sink commit and checkpoint commit is the ONE window
-    where at-least-once delivery shows, and the sink-side ledger is
-    what closes it (foreachBatch is at-least-once by contract)."""
+    kill -9 between sink commit and checkpoint commit re-delivers an
+    applied batch (foreachBatch is at-least-once by contract), and the
+    sink-side ledger is what skips it. Crashes inside a batch's writes
+    are the crash-point matrix of tests/test_snorby.py, on the same
+    drill (`crash_and_resume`)."""
     from concurrent.futures import ThreadPoolExecutor
 
     fx = u2_fixture()
@@ -534,7 +562,9 @@ def d182_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref_fut = ref_pool.submit(run_batch_pipeline, spark, db_ref)
 
     try:
-        _crash_then_resume(spark, db, ckpt, fx)
+        # a one-file-per-batch stream dies right after applying batch 1
+        # (the ledger skips its re-delivery), then resumes 3 files per batch
+        crash_and_resume(spark, db, ckpt, fx, crash_batch=1, after=True, resume_cap=3)
         # join the concurrently-built uninterrupted reference star
         ref_fut.result()
     finally:

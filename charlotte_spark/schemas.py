@@ -1,9 +1,10 @@
 """Explicit schemas for every table the engine reads or writes.
 
 SURVEY §1.3: never infer schemas in production paths. Batch test tables
-match FIXTURES.md §A; the charlotte-domain schemas (alerts, decoded
-packets, snorby star) match FIXTURES.md §B and the field usage in the
-reference (/root/reference/charlotte/__init__.py:466-526, 543-608).
+match FIXTURES.md §A; the charlotte-domain dimension maps match
+FIXTURES.md §B3. The decoded alert row is ``sources/u2_spark.py``'s
+``DECODED_SCHEMA`` (§B1) and the snorby star is declared in
+``streaming/snorby.py``'s ``STAR_TABLES`` (§B4).
 """
 
 from __future__ import annotations
@@ -111,84 +112,6 @@ TABLES: dict[str, T.StructType] = {
 # --------------------------------------------------------------------------
 # B. Charlotte-domain schemas (FIXTURES.md §B)
 # --------------------------------------------------------------------------
-
-# B1: parsed unified2 alert (analog of the idstools event dict consumed at
-# /root/reference/charlotte/__init__.py:466-584)
-ALERT = T.StructType([
-    T.StructField("sensor_name", T.StringType()),
-    T.StructField("event_second", T.LongType()),
-    T.StructField("event_id", T.LongType()),
-    T.StructField("signature_id", T.IntegerType()),
-    T.StructField("generator_id", T.IntegerType()),
-    T.StructField("classification_id", T.IntegerType()),
-    T.StructField("priority", T.IntegerType()),
-    T.StructField(
-        "packets",
-        T.ArrayType(T.StructType([T.StructField("data", T.BinaryType())])),
-    ),
-    T.StructField(
-        "extra_data",
-        T.ArrayType(
-            T.StructType([
-                T.StructField("type", T.IntegerType()),
-                T.StructField("data", T.BinaryType()),
-            ])
-        ),
-    ),
-])
-
-# B2: decoded packet layers (/root/reference/charlotte/__init__.py:484-526)
-IP_STRUCT = T.StructType([
-    T.StructField("src", T.StringType()),
-    T.StructField("dst", T.StringType()),
-    T.StructField("ver", T.IntegerType()),
-    T.StructField("hlen", T.IntegerType()),
-    T.StructField("tos", T.IntegerType()),
-    T.StructField("len", T.IntegerType()),
-    T.StructField("id", T.IntegerType()),
-    T.StructField("flags", T.IntegerType()),
-    T.StructField("off", T.IntegerType()),
-    T.StructField("ttl", T.IntegerType()),
-    T.StructField("proto", T.IntegerType()),
-    T.StructField("csum", T.IntegerType()),
-])
-
-TCP_STRUCT = T.StructType([
-    T.StructField("sport", T.IntegerType()),
-    T.StructField("dport", T.IntegerType()),
-    T.StructField("seq", T.LongType()),
-    T.StructField("ack", T.LongType()),
-    T.StructField("off", T.IntegerType()),
-    T.StructField("flags", T.IntegerType()),
-    T.StructField("win", T.IntegerType()),
-    T.StructField("csum", T.IntegerType()),
-    T.StructField("urp", T.IntegerType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-UDP_STRUCT = T.StructType([
-    T.StructField("sport", T.IntegerType()),
-    T.StructField("dport", T.IntegerType()),
-    T.StructField("len", T.IntegerType()),
-    T.StructField("csum", T.IntegerType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-ICMP_STRUCT = T.StructType([
-    T.StructField("type", T.IntegerType()),
-    T.StructField("code", T.IntegerType()),
-    T.StructField("csum", T.IntegerType()),
-    T.StructField("id", T.IntegerType()),
-    T.StructField("seq", T.IntegerType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-PACKET_DECODED = T.StructType([
-    T.StructField("ip", IP_STRUCT),
-    T.StructField("tcp", TCP_STRUCT),
-    T.StructField("udp", UDP_STRUCT),
-    T.StructField("icmp", ICMP_STRUCT),
-])
 
 # B3: dimension maps (Maps class, /root/reference/charlotte/__init__.py:155-211)
 SIG_MAP = T.StructType([

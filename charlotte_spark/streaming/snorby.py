@@ -18,9 +18,14 @@ processed set-wise:
   last_cid is written back after each batch (:566-569);
 - facts: event / iphdr / tcphdr / udphdr / icmphdr / data, with R11
   timestamp normalization and R12 lowercase-hex payloads;
-- idempotent restart: applied batch ids are recorded; re-delivered
-  batches are skipped (the exactly-once story for sinks without
-  checkpoint-coordinated transactions, SURVEY §7 hard #1).
+- idempotent restart: each applied batch id is recorded last, as the
+  batch's commit marker, and a re-delivered batch whose marker exists is
+  skipped (the exactly-once story for sinks without
+  checkpoint-coordinated transactions, SURVEY §7 hard #1). A crash
+  before the marker replays the whole batch: its dim writes are
+  idempotent, but fact appends or a ``last_cid`` watermark that already
+  landed are applied a second time (the torn batch of ROADMAP item 1;
+  tests/test_snorby.py's crash-point matrix marks those points).
 
 The star's tables are declared once, in ``STAR_TABLES``; the writes
 here, the readers, ``sinks/jdbc.py`` and the MySQL DDL of
@@ -129,22 +134,20 @@ def sql_table(name: str) -> str:
 
 
 def with_retry(fn, max_tries: int = 8, base_sleep: float = 1.0, fatal=None):
-    """R21: exponential backoff (1,2,4,... s) around a sink write.
-    The reference retries forever (:393-397); we cap so tests terminate,
-    and bubble the last error. ``fatal(e) -> bool`` short-circuits
-    errors that no amount of retrying fixes (missing table, SQL syntax)
-    — retrying those burns the full backoff budget (127 s at defaults)
-    before the caller's absent-table handling can run."""
-    last = None
+    """R21: exponential backoff (1,2,4,... s) between the tries of a
+    sink write. The reference retries forever (:393-397); we cap so
+    tests terminate, and raise the last error right after the last try.
+    ``fatal(e) -> bool`` short-circuits errors that no amount of
+    retrying fixes (missing table, SQL syntax) — retrying those burns
+    the full backoff budget (127 s at defaults) before the caller's
+    absent-table handling can run."""
     for attempt in range(max_tries):
         try:
             return fn()
         except Exception as e:  # noqa: BLE001 — sink errors are env-specific
-            if fatal is not None and fatal(e):
+            if attempt == max_tries - 1 or (fatal is not None and fatal(e)):
                 raise
-            last = e
             time.sleep(base_sleep * (2**attempt))
-    raise last
 
 
 class SnorbyDB:
@@ -222,11 +225,13 @@ class SnorbyDB:
         return self._applied
 
     def mark_applied(self, batch_id: int) -> None:
-        """Append-only commit marker; one tiny parquet part per batch
-        (unique name — concurrent-safe against nothing, single writer)."""
+        """Append-only commit marker; one tiny parquet part per batch,
+        named by the batch id alone (single writer, and a batch id is
+        marked once), so a replay after a torn marker write overwrites
+        that write's temporary file."""
         self._publish(
             "_batches",
-            f"part-{batch_id:08d}-{os.getpid()}.parquet",
+            f"part-{batch_id:08d}.parquet",
             [{"batch_id": batch_id}],
             STAR_TABLES["_batches"][0],
         )

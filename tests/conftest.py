@@ -11,6 +11,7 @@ import datetime
 import decimal
 import math
 import os
+from collections import Counter
 
 import duckdb
 import numpy as np
@@ -27,6 +28,52 @@ SF_DIR = os.environ.get("CHARLOTTE_TEST_SF_DIR", "/root/testdata/sf0.01")
 def spark():
     s = get_spark("charlotte-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
+
+
+def star_multiset(db) -> dict[str, Counter]:
+    """Every table of the snorby star ``db`` but the ``_batches`` ledger,
+    as a multiset of rows. A stream assigns the surrogate ``sig_id`` by
+    first sight per batch, one batch run over all signatures at once, so
+    ``signature`` rows and ``event.signature`` carry the signature's
+    natural key instead."""
+    from charlotte_spark.streaming.snorby import STAR_TABLES
+
+    rows = {
+        t: [r.asDict() for r in db.read(t).collect()]
+        for t in STAR_TABLES
+        if t != "_batches"
+    }
+    natural = {}
+    for r in rows["signature"]:
+        natural[r.pop("sig_id")] = tuple(r.values())
+    for r in rows["event"]:
+        r["signature"] = natural.get(r["signature"])
+    return {t: Counter(tuple(r.values()) for r in rs) for t, rs in rows.items()}
+
+
+@pytest.fixture(scope="session")
+def assert_star_matches_batch(spark):
+    """Check a star, table by table and row for row (`star_multiset`),
+    against the star of one uninterrupted batch run over the default
+    fixture, built once per session."""
+    from charlotte_spark.queries.charlotte_pipeline import _fresh_db, run_batch_pipeline
+
+    ref = _fresh_db(spark, "reference_star")
+    run_batch_pipeline(spark, ref)
+    want = star_multiset(ref)
+
+    def check(db) -> None:
+        got = star_multiset(db)
+        diff = {
+            t: f"{sum(got[t].values())} rows, want {sum(want[t].values())} "
+               f"(+{sum((got[t] - want[t]).values())} "
+               f"-{sum((want[t] - got[t]).values())})"
+            for t in want
+            if got[t] != want[t]
+        }
+        assert not diff, f"star differs from the uninterrupted run: {diff}"
+
+    return check
 
 
 @pytest.fixture(scope="session")

@@ -16,7 +16,8 @@ from charlotte_spark.cli import drain, enriched, star_sink
 from charlotte_spark.queries.charlotte_pipeline import (
     _fresh_db,
     _star_summary,
-    run_batch_pipeline,
+    cid_density,
+    crash_and_resume,
     u2_fixture,
 )
 from charlotte_spark.sources.u2_spark import read_spools
@@ -117,42 +118,17 @@ def test_stream_stream_join_matches_across_batches(spark, sf_dir):
     assert got == expected
 
 
-def test_snorby_restart_recovery(spark):
-    """Kill the streaming pipeline mid-run (sink raises after 2
-    micro-batches), restart from the same checkpoint + db, and the final
-    star equals a clean batch run — no duplicates, no loss."""
+def test_snorby_restart_recovery(spark, assert_star_matches_batch):
+    """Kill the streaming pipeline mid-run (the sink raises before its
+    third one-file micro-batch), restart from the same checkpoint and
+    star, and the final star equals a clean batch run, every table row
+    for row — no duplicates, no loss."""
     fx = u2_fixture()
     db = _fresh_db(spark, "restart")
-    ckpt = f"{db.path}_ckpt"
-    if os.path.exists(ckpt):
-        shutil.rmtree(ckpt)
-
-    sink = star_sink(spark, fx["global"], db)
-    applied = {"n": 0}
-
-    def crashing_sink(batch_df, batch_id):
-        if applied["n"] >= 2:
-            raise RuntimeError("injected crash")
-        sink(batch_df, batch_id)
-        applied["n"] += 1
-
-    with pytest.raises(Exception, match="injected crash"):
-        drain(spark, fx["spools"], crashing_sink, ckpt, max_files_per_trigger=1)
-
-    # resume: same checkpoint, same db; Spark replays the failed batch
-    # (idempotent via applied-batch ids) and finishes the rest
-    drain(spark, fx["spools"], sink, ckpt, max_files_per_trigger=3)
-
-    db_ref = _fresh_db(spark, "restart_ref")
-    run_batch_pipeline(spark, db_ref)
-
-    cols = ["hostname", "cid", "sig_name", "sig_priority", "ts"]
-    got = {tuple(r[c] for c in cols) for r in _star_summary(spark, db).collect()}
-    want = {tuple(r[c] for c in cols) for r in _star_summary(spark, db_ref).collect()}
-    assert got == want, (
-        f"restart changed the star: {len(got)} vs {len(want)} rows; "
-        f"extra={list(got - want)[:3]} missing={list(want - got)[:3]}"
-    )
+    # resume: Spark replays the failed batch and finishes the rest,
+    # three files per batch
+    crash_and_resume(spark, db, f"{db.path}_ckpt", fx, crash_batch=2, resume_cap=3)
+    assert_star_matches_batch(db)
 
 
 def test_rollover_listener_fires_per_file(spark, tmp_path):
@@ -244,6 +220,23 @@ def test_with_retry_exhausts():
 
     with pytest.raises(OSError, match="down"):
         with_retry(always_fails, max_tries=3, base_sleep=0.01)
+
+
+def test_with_retry_sleeps_only_between_tries(monkeypatch):
+    """A persistent error is raised right after the last try: at the
+    defaults, eight tries sleep 1, 2, ..., 64 s (127 s) between them and
+    not again after the eighth."""
+    import time
+
+    sleeps = []
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+
+    def always_fails():
+        raise OSError("down")
+
+    with pytest.raises(OSError, match="down"):
+        with_retry(always_fails)
+    assert sleeps == [1, 2, 4, 8, 16, 32, 64]
 
 
 def test_tws_session_processor_logic():
@@ -358,11 +351,11 @@ def test_restart_audit_joins_reference_build_when_drill_fails(spark, monkeypatch
         time.sleep(1.0)
         finished.append(db.path)
 
-    def failing_drill(*args):
+    def failing_drill(*args, **kwargs):
         raise RuntimeError("drill failed")
 
     monkeypatch.setattr(cp, "run_batch_pipeline", slow_reference)
-    monkeypatch.setattr(cp, "_crash_then_resume", failing_drill)
+    monkeypatch.setattr(cp, "crash_and_resume", failing_drill)
     with pytest.raises(RuntimeError, match="drill failed"):
         cp.d182_restart_exactly_once(spark, "")
     assert len(finished) == 1, "reference build still running after the query raised"
@@ -420,17 +413,8 @@ def test_cid_sequencer_state_stays_o_sensors(spark):
         f"sequencer state bytes grew with ingested volume: {sizes}"
     )
     # and the sequence the state protects stays dense
-    event = db.read("event", "sid int, cid bigint, signature int, timestamp timestamp")
-    audit = event.groupBy("sid").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("cid").alias("nd"),
-        F.min("cid").alias("mn"),
-        F.max("cid").alias("mx"),
-    )
-    for r in audit.collect():
-        assert r["n"] == r["nd"] and r["mn"] == 1 and r["mx"] == r["n"], (
-            f"cid sequence not dense for sid={r['sid']}"
-        )
+    for r in cid_density(db.read("event")).collect():
+        assert r["dense"], f"cid sequence not dense for sid={r['sid']}"
 
 
 def test_token_bucket_state_carries_across_batches(spark):

@@ -27,10 +27,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from charlotte_spark.cli import drain, star_sink  # noqa: E402
 from charlotte_spark.operators.loopstate import scratch_dir  # noqa: E402
+from charlotte_spark.queries.charlotte_pipeline import (  # noqa: E402
+    cid_density,
+    crash_and_resume,
+)
 from charlotte_spark.session import get_spark  # noqa: E402
 from charlotte_spark.sources.u2_spark import read_spools  # noqa: E402
 from charlotte_spark.sources.unified2 import write_spool  # noqa: E402
@@ -94,25 +96,6 @@ def run(events_per_file: int = 25_000, n_files: int = 10) -> dict:
     shutil.rmtree(db_path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     db = SnorbyDB(spark, db_path)
-    sink = star_sink(spark, fx["global"], db)
-
-    batches = {"n": 0}
-
-    def make_sink(crash_after: int | None):
-        def crashing(batch_df, batch_id):
-            if crash_after is not None and batches["n"] >= crash_after:
-                raise RuntimeError("injected crash")
-            sink(batch_df, batch_id)
-            batches["n"] += 1
-
-        return crashing
-
-    def stream(crash_after: int | None):
-        # shared-parent single source: 12 files/batch over 40 files
-        # total => 4 micro-batches (crash lands mid-stream) — same
-        # batch volume as the pre-r13 per-source union (4 sensors x 3)
-        drain(spark, fx["spools"], make_sink(crash_after), ckpt,
-              max_files_per_trigger=3 * N_SENSORS)
 
     # No-loss baseline: the event fact is one row per PARSED ROW (an
     # alert explodes to one row per packet — R10), so the expected
@@ -120,29 +103,18 @@ def run(events_per_file: int = 25_000, n_files: int = 10) -> dict:
     # event count.
     expected_rows = read_spools(spark, fx["spools"], streaming=False).count()
 
-    t0 = time.time()
-    crashed = False
-    try:
-        stream(crash_after=2)  # kill mid-stream after 2 applied batches
-    except Exception as e:
-        crashed = "injected crash" in str(e)
-    assert crashed, "crash injection did not fire — raise file count"
-    stream(crash_after=None)  # restart: same checkpoint + db
-    ingest_sec = time.time() - t0
-
-    event = db.read("event")
-    audit = (
-        event.groupBy("sid")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("cid").alias("nd"),
-            F.min("cid").alias("mn"),
-            F.max("cid").alias("mx"),
-        )
-        .collect()
+    # shared-parent single source: 12 files/batch over 40 files total
+    # => 4 micro-batches; the stream dies right before batch 2 (after 2
+    # applied batches) and restarts from the same checkpoint + db — same
+    # batch volume as the pre-r13 per-source union (4 sensors x 3)
+    crash_sec, resume_sec = crash_and_resume(
+        spark, db, ckpt, fx, crash_batch=2, cap=3 * N_SENSORS
     )
+    ingest_sec = crash_sec + resume_sec
+
+    audit = cid_density(db.read("event")).collect()
     total_rows = sum(r["n"] for r in audit)
-    dense = all(r["n"] == r["nd"] and r["mn"] == 1 and r["mx"] == r["n"] for r in audit)
+    dense = all(r["dense"] for r in audit)
     result = {
         "n_events_generated": fx["n_events"],
         "n_rows_expected": expected_rows,
@@ -151,7 +123,7 @@ def run(events_per_file: int = 25_000, n_files: int = 10) -> dict:
         "no_loss": total_rows == expected_rows,
         "no_dups_dense_cids": dense,
         "crash_restart": True,
-        "batches_applied": batches["n"],
+        "batches_applied": len(SnorbyDB(spark, db_path).applied_batches()),
         "gen_sec": round(fx["gen_sec"], 1),
         "ingest_sec": round(ingest_sec, 1),
         "events_per_sec": round(fx["n_events"] / ingest_sec),
@@ -243,18 +215,7 @@ def sustained(events_per_file: int = 10_000, n_files: int = 24) -> dict:
     late = sorted(lat[-5:])[2]
     assert late <= 2.0 * early, f"per-batch latency trend: {early} -> {late}"
 
-    event = db.read("event")
-    audit = (
-        event.groupBy("sid")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("cid").alias("nd"),
-            F.min("cid").alias("mn"),
-            F.max("cid").alias("mx"),
-        )
-        .collect()
-    )
-    dense = all(r["n"] == r["nd"] and r["mn"] == 1 and r["mx"] == r["n"] for r in audit)
+    dense = all(r["dense"] for r in cid_density(db.read("event")).collect())
     assert dense, "cid sequence not dense under sustained replay"
     return {
         "mode": "sustained",

@@ -40,6 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from charlotte_spark.cli import drain, star_sink  # noqa: E402
 from charlotte_spark.queries.charlotte_pipeline import (  # noqa: E402
     _fresh_db,
+    crash_and_resume,
     u2_fixture,
 )
 from charlotte_spark.session import get_spark  # noqa: E402
@@ -58,13 +59,6 @@ def _fit(xs, ys) -> float:
     return sum((a - mx) * (b - my) for a, b in zip(lx, ly)) / sum(
         (a - mx) ** 2 for a in lx
     )
-
-
-def _stream(spark, fx, db, ckpt, sink_wrap=None):
-    """One availableNow pass, one spool file per micro-batch."""
-    sink = star_sink(spark, fx["global"], db)
-    drain(spark, fx["spools"], sink_wrap(sink) if sink_wrap else sink, ckpt,
-          max_files_per_trigger=1)
 
 
 def run(runs_per_point: int = 2) -> dict:
@@ -87,7 +81,8 @@ def run(runs_per_point: int = 2) -> dict:
             ckpt = f"{db.path}_ckpt"
             shutil.rmtree(ckpt, ignore_errors=True)
             t0 = time.time()
-            _stream(spark, fx, db, ckpt)
+            drain(spark, fx["spools"], star_sink(spark, fx["global"], db), ckpt,
+                  max_files_per_trigger=1)
             best_full = min(best_full, time.time() - t0)
             shutil.rmtree(db.path, ignore_errors=True)
             shutil.rmtree(ckpt, ignore_errors=True)
@@ -96,35 +91,14 @@ def run(runs_per_point: int = 2) -> dict:
             db = _fresh_db(spark, f"scale_restart_crash_{n}_{r}")
             ckpt = f"{db.path}_ckpt"
             shutil.rmtree(ckpt, ignore_errors=True)
-            applied = {"n": 0}
-            crash_after = total - 2  # history grows with n; tail is fixed
-
-            def wrap(sink):
-                def crashing(batch_df, batch_id):
-                    sink(batch_df, batch_id)
-                    applied["n"] += 1
-                    if applied["n"] == crash_after:
-                        # after apply+ledger commit, before checkpoint
-                        # commit: the d182 crash point
-                        raise RuntimeError("injected crash after commit")
-
-                return crashing
-
-            # the fired flag lives OUTSIDE the try so the "did not
-            # fire" failure cannot be swallowed by the except arm's own
-            # sentinel match (ADVICE r14)
-            fired = False
-            try:
-                _stream(spark, fx, db, ckpt, sink_wrap=wrap)
-            except Exception as e:
-                if "injected crash" not in str(e):
-                    raise
-                fired = True
-            if not fired:
-                raise AssertionError("injected crash did not fire")
-            t0 = time.time()
-            _stream(spark, fx, db, ckpt)  # re-delivery skip + 2 files
-            best_resume = min(best_resume, time.time() - t0)
+            # right after batch total-3 applies, between the ledger and
+            # the checkpoint commit (the d182 crash point): history grows
+            # with n, the resumed tail (the re-delivered batch plus the
+            # two remaining files) is fixed
+            _, resume = crash_and_resume(
+                spark, db, ckpt, fx, crash_batch=total - 3, after=True
+            )
+            best_resume = min(best_resume, resume)
             shutil.rmtree(db.path, ignore_errors=True)
             shutil.rmtree(ckpt, ignore_errors=True)
 
